@@ -202,22 +202,15 @@ def _run_log_files(args, ap) -> int:
             if marker in pipe.routed_table.committed_markers():
                 counts = {c: 0 for c in classes}
                 rows_in = 0
-                # marker no-op — but a previous run may have crashed AFTER
-                # the routed commit and BEFORE (or during) write_aggregates:
-                # the marker alone would skip the heal forever, so re-derive
-                # the aggregates whenever their stamped source state does
-                # not match the routed sink's current fingerprint
-                agg_rows = (pipe.write_aggregates()
-                            if pipe.aggregates_stale() else {})
             else:
                 pipe.routed_table.truncate()
                 r = pipe.process_batch(pages, batch_id=marker)
                 counts = dict(r.sink_counts)
                 rows_in = r.rows_in
-                # unconditional: a now-EMPTY file state (e.g. logrotate
-                # copytruncate) must truncate the aggregate tables too,
-                # not leave them reporting the previous state
-                agg_rows = pipe.write_aggregates()
+            # every run: the fold rebuilds after the truncate (a now-EMPTY
+            # file state empties the tables too), heals a crash that hit
+            # a previous run after its routed commit, and is idle otherwise
+            agg_rows = pipe.write_aggregates()
             # render from the just-written agg_by_host table (tiny scan)
             # instead of re-aggregating the routed sink
             agg_t = SnapshotTable(Path(out) / "agg_by_host")
@@ -249,6 +242,35 @@ def _run_log_files(args, ap) -> int:
         return 0
     finally:
         spark.stop()
+
+
+def _analyze_routed(rt, spark) -> None:
+    """Default-on stats + blooms for the routed sink: the write path stays
+    zero-driver-footer-read (executor-side Observation counts), and this
+    DISTRIBUTED sweep back-fills min/max/null bounds + host equality
+    blooms for the files each run just committed — so downstream point
+    lookups (read(where=[("host", "=", v)])) prune without a manual
+    analyze. A no-op when every live file already has stats (one manifest
+    read). The ``bloom_cols=host`` default is persisted only after a sweep
+    built it, so a failed sweep leaves the table's properties as they
+    were."""
+    try:
+        default = "bloom_cols" not in rt.properties()
+        n_swept = rt.analyze(spark, bloom_cols=["host"] if default else None)
+        if default:
+            rt.set_properties(bloom_cols="host")
+        if n_swept:
+            print(f"analyzed {n_swept} routed sink file(s) "
+                  "(stats + host blooms)", file=sys.stderr)
+    except Exception as e:  # noqa: BLE001 - default-on optimization
+        # the sweep is an OPTIMIZATION over already-committed data:
+        # a transient failure (executor loss, a file expired by
+        # concurrent maintenance between manifest read and footer
+        # task) must not crash an otherwise-successful run after
+        # its rows are durably committed, nor skip the summary
+        # JSON — reads fail open on missing stats, and the
+        # next run's sweep (or --analyze-pages-style rerun) heals
+        print(f"routed sink analyze skipped: {e}", file=sys.stderr)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -583,16 +605,6 @@ def main(argv: list[str] | None = None) -> int:
             for k, v in r.sink_counts.items():
                 totals[k] += v
         n_batches = len(results)
-        # routed-sink maintenance below (compact/expire) preserves CONTENT
-        # but changes the state fingerprint; capture the pre-maintenance
-        # state (only armed while the aggregates are current), so they can
-        # be restamped (not recomputed) afterwards — a --maintenance-only
-        # run must not trigger a full aggregate rewrite over an unchanged
-        # sink. The token makes the later restamp refuse if a concurrent
-        # ingest from another process commits mid-window.
-        routed_maintenance = args.compact or args.expire_snapshots
-        restamp_token = (pipe.capture_restamp_state()
-                         if routed_maintenance and not rows_in else None)
         if args.compact:
             # no marker: compaction is safe to redo — a directory is only
             # rewritten when it holds >= 2 files below the target size, so
@@ -639,46 +651,18 @@ def main(argv: list[str] | None = None) -> int:
             n_analyzed = pages_table.analyze(spark)
             print(f"analyzed {n_analyzed} pages data file(s)",
                   file=sys.stderr)
-        if restamp_token is not None:
-            # a refused restamp (concurrent ingest raced the maintenance
-            # window) leaves the aggregates stale; the heal below recomputes
-            pipe.restamp_aggregates(expected_state=restamp_token)
-        # rows_in > 0 is the normal trigger; aggregates_stale() covers the
-        # crash window of a PREVIOUS run (routed sink committed, aggregates
-        # not yet written/stamped) that a no-new-rows re-run must heal
-        agg_rows = (pipe.write_aggregates()
-                    if rows_in or pipe.aggregates_stale() else {})
+        # every run: folds this run's batches, heals a previous run that
+        # crashed after its routed commit, and is idle (no Spark job) when
+        # the tables already cover the sink — maintenance moves no cursor
+        agg_rows = pipe.write_aggregates()
         if not args.no_analyze_routed and pipe.routed_table.exists():
-            # default-on stats+blooms for the routed sink: the write path
-            # stays zero-driver-footer-read (executor-side Observation
-            # counts), and this DISTRIBUTED sweep back-fills min/max/null
-            # bounds + host equality blooms for the files each run just
-            # committed — so downstream point lookups (read(where=[("host",
-            # "=", v)])) prune without a manual analyze. A no-op when every
-            # live file already has stats (one manifest read).
-            rt = pipe.routed_table
-            try:
-                if "bloom_cols" not in rt.properties():
-                    rt.set_properties(bloom_cols="host")
-                n_swept = rt.analyze(spark)
-                if n_swept:
-                    print(f"analyzed {n_swept} routed sink file(s) "
-                          "(stats + host blooms)", file=sys.stderr)
-            except Exception as e:  # noqa: BLE001 - default-on optimization
-                # the sweep is an OPTIMIZATION over already-committed data:
-                # a transient failure (executor loss, a file expired by
-                # concurrent maintenance between manifest read and footer
-                # task) must not crash an otherwise-successful run after
-                # its rows are durably committed, nor skip the summary
-                # JSON below — reads fail open on missing stats, and the
-                # next run's sweep (or --analyze-pages-style rerun) heals
-                print(f"routed sink analyze skipped: {e}", file=sys.stderr)
+            _analyze_routed(pipe.routed_table, spark)
         print(json.dumps({"batches": n_batches, "rows_in": rows_in,
                           "sink_counts": totals,
                           "malformed": totals["unparsed"] + totals["error"],
                           "aggregate_tables": agg_rows}))
         # the reference's final summary table (print.go:26-49), rendered
-        # from the just-materialized (or verified-current) agg_by_host
+        # from the just-folded (or already current) agg_by_host
         # table — a tiny scan — instead of re-aggregating the whole
         # all-time routed sink a second time
         from .plans.pipeline import summary_text_from_agg

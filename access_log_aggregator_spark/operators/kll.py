@@ -268,7 +268,7 @@ def kll_merge(sketch_df: DataFrame,
     raw union of per-shard sketch tables is as valid an input as a
     merged one. Each row carries its own k (mixed-k unions raise)."""
     group_cols = group_cols or []
-    gfields = [f for f in sketch_df.schema.fields if f.name in group_cols]
+    gfields = _group_fields(sketch_df, group_cols)
     out_schema = StructType(gfields + _SKETCH_FIELDS)
 
     def merge(pdf):
@@ -295,7 +295,7 @@ def kll_quantiles(sketch_df: DataFrame, qs: list[float],
         if not 0.0 <= q <= 1.0:
             raise ValueError(f"quantiles must be in [0, 1], got {q}")
     group_cols = group_cols or []
-    gfields = [f for f in sketch_df.schema.fields if f.name in group_cols]
+    gfields = _group_fields(sketch_df, group_cols)
     out_schema = StructType(gfields + [StructField("q", DoubleType()),
                                        StructField("quantile_est",
                                                    DoubleType())])

@@ -25,6 +25,8 @@ from pathlib import Path
 from typing import Optional
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,11 +35,13 @@ from ..operators.aggregate import (
     aggregate_by_host,
     aggregate_by_status_bucket,
     aggregate_by_window,
+    merge_state,
+    partial_aggregates,
 )
 from ..operators.enrich import enrich
 from ..operators.parse import parse_stage
 from ..operators.route import route
-from ..sources.tableio import SnapshotTable
+from ..sources.tableio import CommitConflict, SnapshotTable
 
 #: columns persisted to the routed sink (narrow — html/text already dropped)
 ROUTED_COLUMNS = [
@@ -49,17 +53,15 @@ ROUTED_COLUMNS = [
 #: the three materialized aggregate sinks written by write_aggregates
 AGG_TABLES = ("agg_by_host", "agg_by_status_bucket", "agg_by_window")
 
+#: routed partitions the aggregates read: the reference-valid classes
+_VALID_DIRS = {f"match_class={c}" for c in (X.CLASS_PARSED, X.CLASS_BOT)}
 
-@dataclass(frozen=True)
-class RestampState:
-    """Token returned by :meth:`Pipeline.capture_restamp_state`: the routed
-    sink's fingerprint plus the content portion (live rows + committed
-    markers) that content-preserving maintenance keeps. Opaque to callers —
-    they pass it back to :meth:`Pipeline.restamp_aggregates`."""
+#: the routed columns the aggregates read, given to the reader so that no
+#: footer-inference job runs
+_AGG_INPUT = "host string, status_code bigint, duration double, log_ts timestamp"
 
-    fp: str
-    live_rows: int
-    markers: frozenset
+#: how often write_aggregates re-reads and folds again after losing a race
+_FOLD_ATTEMPTS = 5
 
 
 def observe_routed_classes(routed: DataFrame, name: str):
@@ -218,163 +220,71 @@ class Pipeline:
         v = self.valid_records()
         return None if v is None else aggregate_by_window(v, duration)
 
-    def _routed_state(self) -> Optional["RestampState"]:
-        """The routed sink's state from ONE manifest read (atomic against
-        a concurrent commit landing mid-derivation — SnapshotTable.state
-        guarantees that): the fingerprint plus the content portion (live
-        rows, committed markers) that content-preserving maintenance
-        keeps. Returns None when the sink does not exist."""
-        t = self.routed_table
-        if not t.exists():
-            return None
-        import hashlib
-
-        last_id, live_rows, markers = t.state()
-        basis = [last_id, live_rows, sorted(markers)]
-        fp = hashlib.md5(repr(basis).encode()).hexdigest()
-        return RestampState(fp=fp, live_rows=live_rows, markers=markers)
-
-    def routed_state_fingerprint(self) -> Optional[str]:
-        """Cheap fingerprint of the routed sink's state from ONE manifest
-        read: last snapshot id + live row count + committed markers.
-        Snapshot ids alone are NOT enough: a truncate+recommit rebuild
-        (--log-file) restarts ids at 1 and could coincide with the stamped
-        value — the marker set always differs across rebuilds.
-        Compaction moves this fingerprint by design (a replace snapshot
-        advances the last id) and the CLI restamps current aggregates
-        afterwards (:meth:`restamp_aggregates`) instead of recomputing;
-        expiry normally leaves it untouched (expired snapshots' markers
-        are retained, last id and live rows unchanged) — except on a sink
-        whose retention list is at its cap, where the oldest markers age
-        out, the fingerprint moves, and the staleness heal recomputes
-        (safe, just not free)."""
-        st = self._routed_state()
-        return None if st is None else st.fp
-
-    @staticmethod
-    def _stamp_matches(stamp: Optional[str], fp: Optional[str]) -> bool:
-        """Whether a stamped ``source_state`` denotes fingerprint ``fp``.
-        The previous release stamped ``repr(fp)`` (a quoted hash, or the
-        four characters ``None``); accepting that form keeps an upgraded
-        binary from recomputing every aggregate over an unchanged sink."""
-        return stamp == (fp or "") or stamp == repr(fp)
-
-    def _aggs_all_stamped(self, fp: str) -> bool:
-        """True when every aggregate table exists and is stamped with
-        ``fp`` — the predicate both capture (is the current state what
-        the aggregates cover?) and the guarded restamp (are the stamps
-        still the captured baseline?) decide on."""
-        for name in AGG_TABLES:
-            t = SnapshotTable(self.out_root / name)
-            if not t.exists() or not self._stamp_matches(
-                    t.properties().get("source_state"), fp):
-                return False
-        return True
-
-    def aggregates_stale(self) -> bool:
-        """True when any aggregate table is missing or was written against
-        a DIFFERENT routed-sink state than the current one — the crash
-        window between a routed-sink commit and write_aggregates() (or a
-        kill mid-write_aggregates) leaves exactly this mismatch, and the
-        idempotence-marker no-op re-run would otherwise never heal it."""
-        fp = self.routed_state_fingerprint()
-        for name in AGG_TABLES:
-            t = SnapshotTable(self.out_root / name)
-            if not t.exists():
-                if fp is not None:
-                    # the routed sink exists (possibly empty) but this
-                    # sink never wrote — write_aggregates creates+stamps
-                    # it (an empty table for an empty state), so this
-                    # branch converges after one heal
-                    return True
-            elif not self._stamp_matches(
-                    t.properties().get("source_state"), fp):
-                return True
-        return False
-
-    def capture_restamp_state(self) -> Optional["RestampState"]:
-        """Arm a post-maintenance restamp: capture the routed state IF the
-        aggregates are stamped with exactly this state (i.e. current).
-        Returns None when the sink is absent or any aggregate is missing
-        or stale — a restamp may only ever bridge content-preserving
-        maintenance, never mask a real mismatch."""
-        st = self._routed_state()
-        if st is None or not self._aggs_all_stamped(st.fp):
-            return None
-        return st
-
-    def restamp_aggregates(
-            self, expected_state: Optional["RestampState"] = None) -> bool:
-        """Re-stamp the CURRENT routed-state fingerprint onto the existing
-        aggregate tables without recomputing them — for content-preserving
-        maintenance (compaction's replace snapshot, snapshot expiry) that
-        changes the fingerprint but not the data the aggregates derive
-        from.
-
-        Pass the :meth:`capture_restamp_state` token taken BEFORE the
-        maintenance as ``expected_state``: the restamp then refuses
-        (returns False) when anything but content-preserving maintenance
-        moved the state in between — a concurrent ingest changes the live
-        row count and commits a marker the captured set never saw, while
-        compaction preserves both and expiry preserves both too (expired
-        snapshots' markers are retained in the manifest so replays stay
-        deduped; the ``<=`` below keeps the guard safe even for an older
-        manifest written before that retention existed).
-        Refusing leaves the aggregates stale so the heal path recomputes
-        them; stamping would mark rows they never aggregated as current
-        forever. Without ``expected_state`` the caller asserts the
-        aggregates were current and no writer raced (single-process use).
-        """
-        st = self._routed_state()
-        if st is None:
-            return False
-        if expected_state is not None:
-            if (st.live_rows != expected_state.live_rows
-                    or not st.markers <= expected_state.markers):
-                return False
-            # the stamps must still be the captured baseline — another
-            # writer re-stamping or recomputing them in the window means
-            # this token no longer describes what they cover
-            if not self._aggs_all_stamped(expected_state.fp):
-                return False
-        for name in AGG_TABLES:
-            t = SnapshotTable(self.out_root / name)
-            if t.exists():
-                t.set_properties(source_state=st.fp)
-        return True
-
     def write_aggregates(self) -> dict[str, int]:
-        """Materialize the three aggregate views as sink tables
-        (overwrite-by-job semantics — SURVEY.md §2.5 K1: the authoritative
-        sinks are tables, stdout is presentation). Returns rows per table.
+        """Fold the routed rows appended since the last call into the
+        three aggregate tables (SURVEY.md §2.5 K1: the authoritative sinks
+        are tables, stdout is presentation). Returns rows per table
+        written, ``{}`` when there was nothing to fold.
 
-        A None view (routed sink empty or absent) still TRUNCATES an
-        existing aggregate table: the sinks mirror the routed state, and a
-        state that became empty (--log-file rebuild over a truncated file)
-        must not leave the aggregates reporting the previous run.
+        Each table carries its cursor as properties: ``agg_through``, the
+        routed snapshot id it covers, and ``agg_rows``, the routed live
+        rows it covers. New table = old table ⊕ the partial aggregate of
+        the valid-class files of the routed APPEND snapshots past
+        ``agg_through`` (compaction's replace snapshots carry no new
+        rows). The same fold from an empty table over every live file is
+        the rebuild, taken when a table is missing or has no cursor, the
+        cursors disagree (a crash between two table commits), or
+        ``agg_rows`` + the new appends' rows != the routed live rows (a
+        truncate, or appends compacted and expired before they were
+        folded). An idle call runs no Spark job and writes nothing.
 
-        Each table is stamped with the routed sink's state fingerprint
-        AFTER its rows land, so :meth:`aggregates_stale` detects a crash
-        at any point in this method (the not-yet-stamped table still
-        carries the previous fingerprint, or none)."""
-        fp = self.routed_state_fingerprint()
+        The partial is ONE grouping-sets job over the new files only; the
+        merge runs in Arrow on the driver, bounded by distinct keys, not
+        rows (SCALE.md). Each table's rows and cursor land in one
+        manifest commit guarded by its CAS, so a reader never sees an
+        empty or half-written table and two concurrent folds cannot
+        double-count: the loser re-reads and folds again."""
+        for _ in range(_FOLD_ATTEMPTS):
+            try:
+                return self._fold_aggregates()
+            except (CommitConflict, FileNotFoundError):
+                # a concurrent fold committed (and unlinked the previous
+                # rows' file) since this one read its tables: start over
+                continue
+        raise CommitConflict(
+            f"aggregate fold lost {_FOLD_ATTEMPTS} races; retry the call")
+
+    def _fold_aggregates(self) -> dict[str, int]:
+        tables = [SnapshotTable(self.out_root / n) for n in AGG_TABLES]
+        # each head is read BEFORE the cursor and rows: every commit mints
+        # a new id, so the CAS on it covers everything read after it
+        heads = [(t.current_snapshot_id() if t.exists() else None) or 0
+                 for t in tables]
+        cursors = {(p.get("agg_through"), p.get("agg_rows")) for p in
+                   (t.properties() if t.exists() else {} for t in tables)}
+        through, rows = cursors.pop() if len(cursors) == 1 else (None, None)
+        ch = self.routed_table.changes_since(
+            -1 if through is None else int(through))
+        fold = rows is not None and int(rows) + ch.new_rows == ch.live_rows
+        if fold and not ch.new_files:
+            return {}
+        files = [f for f in (ch.new_files if fold else ch.live_files)
+                 if Path(f).parent.name in _VALID_DIRS]
+        partial = None
+        if files:
+            valid = self.spark.read.schema(_AGG_INPUT).parquet(*files)
+            partial = partial_aggregates(valid).toArrow()
         out: dict[str, int] = {}
-        for name, df in (
-            ("agg_by_host", self.agg_by_host()),
-            ("agg_by_status_bucket", self.agg_by_status_bucket()),
-            ("agg_by_window", self.agg_by_window()),
-        ):
-            # ALWAYS create + stamp, even for a None view (routed sink
-            # empty or absent): the empty aggregate table mirrors the
-            # empty state, and without the stamp aggregates_stale() would
-            # report the missing table stale forever (the heal loop must
-            # converge after one write)
-            t = SnapshotTable.create(self.out_root / name, name)
-            t.truncate()
-            if df is not None:
-                t.append_spark(df)
-            t.set_properties(source_state=fp or "")
-            out[name] = t.row_count()
+        for name, t, head in zip(AGG_TABLES, tables, heads):
+            prior = None
+            if fold:
+                prior = pa.concat_tables(
+                    [pq.read_table(f) for f in t.data_files()])
+            table = merge_state(name, prior, partial)
+            SnapshotTable.create(t.root, name).overwrite_arrow(
+                table, expected_current=head,
+                agg_through=str(ch.head), agg_rows=str(ch.live_rows))
+            out[name] = table.num_rows
         return out
 
     def summary_text(self, now=None) -> str:

@@ -36,6 +36,7 @@ from typing import Optional, Sequence
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
@@ -156,11 +157,11 @@ def _check_schema_compatible(incoming, table) -> None:
 def _live_set(snaps: list[dict]) -> tuple[int, list[dict]]:
     """The (base id, live snapshots) of a raw manifest snapshot list: the
     latest ``replace`` snapshot (the rewritten base, -1 if none) plus every
-    ``append`` above it. THE one copy of the live-set rule — ``state()``,
-    ``expire_snapshots()`` and ``_live_snapshots()`` all derive from it, so
-    a future operation kind (delete/overwrite) changes the rule in exactly
-    one place and the staleness fingerprint can never desynchronize from
-    the actual live view."""
+    ``append`` above it. THE one copy of the live-set rule —
+    ``changes_since()``, ``expire_snapshots()`` and ``_live_snapshots()``
+    all derive from it, so a future operation kind (delete) changes the
+    rule in exactly one place and the aggregate fold's row invariant can
+    never desynchronize from the actual live view."""
     base = -1
     for s in snaps:
         if s.get("operation", "append") == "replace":
@@ -171,16 +172,6 @@ def _live_set(snaps: list[dict]) -> tuple[int, list[dict]]:
         and (s.get("operation", "append") == "append" or s["id"] == base)
     ]
     return base, live
-
-
-def _all_markers(m: dict) -> set[str]:
-    """Every idempotence marker a raw manifest knows: live/time-travel
-    snapshots' markers plus the bounded ``expired_markers`` retention
-    list. THE one copy of the marker-set rule — ``committed_markers()``
-    and ``state()`` both derive from it, so the staleness fingerprint can
-    never desynchronize from the dedupe check."""
-    return ({s["marker"] for s in m["snapshots"] if s.get("marker")}
-            | set(m.get("expired_markers", [])))
 
 
 def _marker_snapshot_id(m: dict, marker: str) -> Optional[int]:
@@ -197,6 +188,39 @@ def _marker_snapshot_id(m: dict, marker: str) -> Optional[int]:
         base, _ = _live_set(m["snapshots"])
         return base if base >= 0 else None
     return None
+
+
+def _drop_history(m: dict) -> list[str]:
+    """Empty a raw manifest for a full rewrite (:meth:`SnapshotTable.truncate`
+    and the ``overwrite`` commit) and return the dropped generation's files,
+    which the caller unlinks after the manifest commit."""
+    doomed = sorted({f for s in m["snapshots"] for f in s["files"]})
+    # preserve the id high-water mark: the first post-truncate
+    # commit must NOT re-mint a dropped id, or a maintenance CAS
+    # that captured its base before the truncate would pass
+    # against the rebuilt table (ABA) and resurrect the dropped
+    # generation's files in a replace snapshot.
+    m["last_id"] = max(
+        int(m.get("last_id", 0)),
+        max((s["id"] for s in m["snapshots"]), default=0),
+    )
+    m["snapshots"] = []
+    # a truncate voids the idempotence history along with the rows:
+    # a marker retained past the rebuild would silently no-op the
+    # very re-commit the truncate exists to enable. The expiry
+    # metadata goes with it — the expired history it described no
+    # longer exists, and a stale stream_floor would make a fresh
+    # post-rebuild checkpoint warn about compact-* rows that were
+    # deleted, not compacted.
+    m.pop("expired_markers", None)
+    m.pop("expired_append_ceiling", None)
+    m.pop("stream_floor", None)
+    # the schema history goes with the rows: truncate is
+    # full-recompute mode, and the rewriter may legitimately write
+    # a different shape (its first post-truncate append re-adopts)
+    m.pop("schemas", None)
+    m.pop("current_schema_id", None)
+    return doomed
 
 
 @dataclass
@@ -221,6 +245,19 @@ class Snapshot:
     #: from untracked (legacy) tables and on routed-sink commits, whose
     #: hive layout keeps the partition column out of the files.
     schema_id: Optional[int] = None
+
+
+@dataclass(frozen=True)
+class Changes:
+    """What a consumer that has folded every snapshot up to a cursor must
+    fold next, from ONE manifest read (:meth:`SnapshotTable.changes_since`).
+    File lists are absolute paths."""
+
+    head: int            # highest snapshot id minted so far (0 = none)
+    live_rows: int       # rows in the live view
+    live_files: list[str]
+    new_rows: int        # rows of the append snapshots past the cursor
+    new_files: list[str]
 
 
 class SnapshotTable:
@@ -293,20 +330,29 @@ class SnapshotTable:
         are what make a replayed commit a no-op: a streaming checkpoint
         that replays a batch AFTER maintenance expired that batch's
         snapshot must still dedupe, or the replay double-commits rows."""
-        return _all_markers(self._manifest())
+        m = self._manifest()
+        return ({s["marker"] for s in m["snapshots"] if s.get("marker")}
+                | set(m.get("expired_markers", [])))
 
-    def state(self) -> tuple[Optional[int], int, frozenset]:
-        """(last snapshot id, live row count, committed markers) from ONE
-        manifest read — atomic against a concurrent commit landing between
-        the three derivations. This is the basis consumers fingerprint the
-        table by (plans/pipeline.py), kept here so the live-set rule (the
-        latest replace base plus appends above it) lives in one module."""
+    def changes_since(self, cursor: int) -> Changes:
+        """The live view plus the APPEND snapshots past ``cursor`` (the
+        ``read(start_after=)`` rule: replace snapshots carry no new rows),
+        from one manifest read. ``head`` is the cursor that covers this
+        whole view; ids stay monotonic across truncate, so a consumer
+        whose ``rows + new_rows`` differs from ``live_rows`` lost sight of
+        rows (truncate, or appends expired before it folded them) and
+        must rebuild from ``live_files``."""
         m = self._manifest()
         snaps = m["snapshots"]
-        _, live = _live_set(snaps)
-        live_rows = sum(s["row_count"] for s in live)
-        markers = frozenset(_all_markers(m))
-        return (snaps[-1]["id"] if snaps else None), live_rows, markers
+        new = [s for s in snaps if s["id"] > cursor
+               and s.get("operation", "append") == "append"]
+        return Changes(
+            head=max([int(m.get("last_id", 0))] + [s["id"] for s in snaps]),
+            live_rows=sum(s["row_count"] for s in _live_set(snaps)[1]),
+            live_files=self._data_files_from(m, None, None, None),
+            new_rows=sum(s["row_count"] for s in new),
+            new_files=self._data_files_from(m, cursor, None, None),
+        )
 
     # -- table properties (Iceberg table-properties analog) -------------------
     def properties(self) -> dict:
@@ -447,7 +493,9 @@ class SnapshotTable:
                       marker: Optional[str], operation: str = "append",
                       expected_current: Optional[int] = None,
                       stats: Optional[dict] = None,
-                      schema=None, unconvertible: bool = False) -> int:
+                      schema=None, unconvertible: bool = False,
+                      overwrite: bool = False,
+                      properties: Optional[dict] = None) -> int:
         """``stats`` (optional) maps ``str(path)`` — as spelled in
         ``files`` — to its filestats record; recorded in the snapshot
         under the manifest-relative path. Files without an entry are
@@ -459,7 +507,13 @@ class SnapshotTable:
         first-append pair can't both initialize) against the current
         schema and the snapshot records the schema id it wrote under.
         ``None`` commits untracked (legacy tables, the hive-partitioned
-        routed sink whose files deliberately omit the partition column)."""
+        routed sink whose files deliberately omit the partition column).
+
+        ``overwrite`` makes the new snapshot the table's whole content (the
+        history is dropped as :meth:`truncate` drops it, and its files are
+        unlinked after the commit); ``properties`` merge into the table
+        properties in the same manifest write. ``expected_current`` is
+        the snapshot id the caller's rewrite read, 0 for an empty table."""
         with self._manifest_lock():
             m = self._manifest()
             # cleanup basis for the dedupe/conflict paths below: a file is
@@ -490,7 +544,7 @@ class SnapshotTable:
                 # truncate+rebuild between base capture and this check can
                 # never re-mint the captured id (ABA), so id equality
                 # really does mean "the exact state the rewrite read".
-                if cur != expected_current:
+                if (cur or 0) != expected_current:
                     for f in files:
                         if str(f) not in referenced:
                             f.unlink(missing_ok=True)
@@ -508,6 +562,7 @@ class SnapshotTable:
                     "frame contains arrow types outside the Spark type "
                     "mapping — cannot validate against the tracked table "
                     "schema; convert the column first")
+            doomed = _drop_history(m) if overwrite else []
             schema_id = None
             if schema is not None:
                 if "schemas" not in m:
@@ -559,7 +614,11 @@ class SnapshotTable:
             if schema_id is not None:
                 snap["schema_id"] = schema_id
             m["snapshots"].append(snap)
+            if properties:
+                m.setdefault("properties", {}).update(properties)
             self._write_manifest(m)
+            for f in doomed:
+                (self.root / f).unlink(missing_ok=True)
             return sid
 
     def compact(self, rows_per_file: int = 1_000_000,
@@ -903,6 +962,34 @@ class SnapshotTable:
             [dest], len(pdf), marker, stats={str(dest): rec},
             schema=st, unconvertible=st is None)
 
+    def overwrite_arrow(self, table: pa.Table, expected_current: int,
+                        **properties: str) -> int:
+        """Replace the table's whole content with ``table`` and merge
+        ``properties``, in ONE manifest commit: a reader sees the old rows
+        and properties or the new ones, never an empty table between
+        (truncate + append + set_properties would be three commits).
+        Guarded by the ``expected_current`` CAS (the snapshot id the
+        rewrite was computed from, 0 for an empty table): a concurrent
+        commit raises :class:`CommitConflict`. One file, written without
+        pandas or Arrow schema metadata in its footer. Not for streamed
+        tables: the old ``part-*`` files are deleted."""
+        from . import filestats
+
+        dest = self.root / "data" / f"part-{uuid.uuid4().hex}.parquet"
+        # dictionary-encode only the columns that repeat values, as the
+        # Spark writer's fallback does: a dictionary over unique keys or
+        # sums only adds bytes
+        repeats = [c for c in table.column_names
+                   if 2 * pc.count_distinct(table[c]).as_py() <= table.num_rows]
+        mc: list = []
+        pq.write_table(table, dest, metadata_collector=mc, store_schema=False,
+                       use_dictionary=repeats)
+        return self._commit_files(
+            [dest], table.num_rows, None, expected_current=expected_current,
+            stats={str(dest): filestats.stats_from_metadata(mc[0])},
+            schema=_spark_schema_of_arrow(table.schema), overwrite=True,
+            properties=properties)
+
     def add_files(self, files, marker: Optional[str] = None) -> int:
         """Register PRE-EXISTING parquet files as one append snapshot — the
         Iceberg ``add_files`` migration-procedure analog: no data rewrite,
@@ -989,8 +1076,8 @@ class SnapshotTable:
 
     def truncate(self) -> None:
         """Drop all snapshots and DELETE their data files (full-recompute
-        mode: the aggregate-table rewrite and --log-file's routed-sink
-        rebuild call this every run — keeping the dropped generation's
+        mode: --log-file's routed-sink rebuild calls this whenever the
+        files changed — keeping the dropped generation's
         parquet on disk would grow the layout by one dead generation per
         run, with no code path ever able to reclaim it, since
         :meth:`expire_snapshots` only frees files superseded by a replace
@@ -1013,32 +1100,7 @@ class SnapshotTable:
                     "retire them first"
                 )
             m = self._manifest()
-            doomed = sorted({f for s in m["snapshots"] for f in s["files"]})
-            # preserve the id high-water mark: the first post-truncate
-            # commit must NOT re-mint a dropped id, or a maintenance CAS
-            # that captured its base before the truncate would pass
-            # against the rebuilt table (ABA) and resurrect the dropped
-            # generation's files in a replace snapshot.
-            m["last_id"] = max(
-                int(m.get("last_id", 0)),
-                max((s["id"] for s in m["snapshots"]), default=0),
-            )
-            m["snapshots"] = []
-            # a truncate voids the idempotence history along with the rows:
-            # a marker retained past the rebuild would silently no-op the
-            # very re-commit the truncate exists to enable. The expiry
-            # metadata goes with it — the expired history it described no
-            # longer exists, and a stale stream_floor would make a fresh
-            # post-rebuild checkpoint warn about compact-* rows that were
-            # deleted, not compacted.
-            m.pop("expired_markers", None)
-            m.pop("expired_append_ceiling", None)
-            m.pop("stream_floor", None)
-            # the schema history goes with the rows: truncate is
-            # full-recompute mode, and the rewriter may legitimately write
-            # a different shape (its first post-truncate append re-adopts)
-            m.pop("schemas", None)
-            m.pop("current_schema_id", None)
+            doomed = _drop_history(m)
             self._write_manifest(m)
             # unlink INSIDE the lock (like expire_snapshots, still after
             # the manifest commit): a stream registering the instant the
@@ -1060,7 +1122,8 @@ class SnapshotTable:
         return out
 
     def analyze(self, spark: SparkSession,
-                parallelism: Optional[int] = None) -> int:
+                parallelism: Optional[int] = None,
+                bloom_cols: Optional[list[str]] = None) -> int:
         """Fill in column statistics for files committed without them —
         chiefly :meth:`append_spark` output, whose commit path does zero
         footer reads by design. The footer sweep runs as a Spark job
@@ -1072,8 +1135,9 @@ class SnapshotTable:
         (reading just those columns' values — the one stat footers cannot
         provide) for files whose records predate the property. Re-running
         is a no-op, including for columns that stored no bloom (the
-        considered-set marker). Returns the number of files whose stats
-        were recorded.
+        considered-set marker). ``bloom_cols`` overrides the property for
+        this sweep (the CLI applies its default before persisting it).
+        Returns the number of files whose stats were recorded.
 
         The Iceberg analog is the write-path stats collection plus
         ``rewrite_manifests`` — run it after bulk ingests so scan
@@ -1081,7 +1145,7 @@ class SnapshotTable:
         from . import filestats
 
         m = self._manifest()
-        bcols = self.bloom_cols()
+        bcols = self.bloom_cols() if bloom_cols is None else bloom_cols
         missing: set[str] = set()
         for s in m["snapshots"]:
             have = s.get("stats") or {}

@@ -446,3 +446,31 @@ def test_routed_sink_carries_stats_and_blooms_by_default(tmp_path):
              "--no-analyze-routed")
     t2 = SnapshotTable(_P(data2) / "out" / "routed")
     assert t2.data_files() and not t2._file_stats()
+
+
+def test_failed_routed_sweep_leaves_properties_unchanged(tmp_path,
+                                                         monkeypatch):
+    """The default ``bloom_cols=host`` property persists only once a sweep
+    built the blooms: when ``analyze`` raises, the routed table's
+    properties stay as they were (and the run goes on)."""
+    import pandas as pd
+
+    sys.path.insert(0, str(REPO))
+    from access_log_aggregator_spark.cli import _analyze_routed
+    from access_log_aggregator_spark.sources.tableio import SnapshotTable
+
+    t = SnapshotTable.create(tmp_path / "routed", "routed")
+    t.append_pandas(pd.DataFrame({"host": ["a.example", "b.example"]}))
+    before = t.properties()
+
+    def boom(self, spark, parallelism=None, bloom_cols=None):
+        raise RuntimeError("executor lost")
+
+    monkeypatch.setattr(SnapshotTable, "analyze", boom)
+    _analyze_routed(t, spark=None)
+    assert t.properties() == before
+    monkeypatch.setattr(SnapshotTable, "analyze",
+                        lambda self, spark, parallelism=None, bloom_cols=None:
+                        len(bloom_cols or []))
+    _analyze_routed(t, spark=None)
+    assert t.bloom_cols() == ["host"]

@@ -213,3 +213,16 @@ def test_mixed_k_union_raises_through_dataframe_api(spark):
     assert ra.kll_k == 64  # k persisted in the row
     with _pytest.raises(Exception, match="different k"):
         kll_merge(a.unionByName(b)).collect()
+
+
+def test_misspelled_group_column_raises_on_the_driver(spark):
+    """kll_merge and kll_quantiles validate their group columns like the
+    build path: a typo is a ValueError naming the column, raised before
+    any job runs (not an executor-side pandas KeyError)."""
+    df = spark.createDataFrame([("a", float(i)) for i in range(50)],
+                               "host string, v double")
+    sk = kll_sketch_table(df, "v", ["host"])
+    with pytest.raises(ValueError, match="hots"):
+        kll_merge(sk, ["hots"])
+    with pytest.raises(ValueError, match="hots"):
+        kll_quantiles(sk, [0.5], ["hots"])

@@ -204,113 +204,6 @@ def test_routed_commit_reads_zero_parquet_footers(
     assert p.routed_table.row_count() == 150
 
 
-def test_aggregates_staleness_stamp(spark, corpus, lookup_sdf, tmp_path_factory):
-    """write_aggregates stamps each table with the routed sink's state
-    fingerprint; aggregates_stale() flags the crash window between a
-    routed commit and the aggregate write, and goes quiet once healed."""
-    root = tmp_path_factory.mktemp("aggstale")
-    p = Pipeline(spark, root / "out", lookup_sdf)
-    pages = spark.createDataFrame(corpus.pages.iloc[:200])
-    p.process_batch(pages, batch_id="b1")
-    assert p.aggregates_stale()          # routed committed, aggs never written
-    p.write_aggregates()
-    assert not p.aggregates_stale()      # stamped against current state
-    p.process_batch(spark.createDataFrame(corpus.pages.iloc[200:300]),
-                    batch_id="b2")
-    assert p.aggregates_stale()          # new routed rows, stale stamp
-    p.write_aggregates()
-    assert not p.aggregates_stale()
-    # losing one aggregate table (crash mid-write_aggregates) is stale too
-    import shutil
-
-    shutil.rmtree(root / "out" / "agg_by_window")
-    assert p.aggregates_stale()
-    p.write_aggregates()
-    assert not p.aggregates_stale()
-
-    # content-preserving maintenance changes the fingerprint by design;
-    # restamp_aggregates records the new state WITHOUT recomputing
-    pre = p.capture_restamp_state()
-    assert pre is not None               # aggregates current at capture
-    assert p.routed_table.compact(rows_per_file=10) is not None
-    assert p.aggregates_stale()          # fingerprint moved, content did not
-    assert p.restamp_aggregates(expected_state=pre)
-    assert not p.aggregates_stale()
-    # expiry shrinks the marker set (still content-preserving): restampable
-    pre = p.capture_restamp_state()
-    assert pre is not None
-    assert p.routed_table.expire_snapshots()
-    assert p.restamp_aggregates(expected_state=pre)
-    assert not p.aggregates_stale()
-
-
-def test_restamp_refuses_concurrent_ingest(
-    spark, corpus, lookup_sdf, tmp_path_factory
-):
-    """A commit landing between the pre-maintenance capture and the
-    restamp means the aggregates no longer cover the sink: the restamp
-    must REFUSE (rows it never aggregated would otherwise be stamped
-    'current' forever) and leave the staleness heal to recompute."""
-    root = tmp_path_factory.mktemp("aggrace")
-    p = Pipeline(spark, root / "out", lookup_sdf)
-    p.process_batch(spark.createDataFrame(corpus.pages.iloc[:200]),
-                    batch_id="b1")
-    p.write_aggregates()
-    pre = p.capture_restamp_state()
-    assert pre is not None
-    # maintenance runs ... and a concurrent ingest commits mid-window
-    p.process_batch(spark.createDataFrame(corpus.pages.iloc[200:260]),
-                    batch_id="race-1")
-    assert p.routed_table.compact(rows_per_file=10) is not None
-    assert p.restamp_aggregates(expected_state=pre) is False
-    assert p.aggregates_stale()          # heal path recomputes, not masks
-    # capture itself returns None while the aggregates are stale: the
-    # caller cannot even arm a restamp over a mismatched sink
-    assert p.capture_restamp_state() is None
-
-
-def test_aggregates_stale_accepts_legacy_stamp(
-    spark, corpus, lookup_sdf, tmp_path_factory
-):
-    """Stamps written by the previous release used repr(fp) (quoted hash /
-    'None'); they must still read as current, or the first post-upgrade
-    maintenance run triggers a full aggregate recompute over an unchanged
-    sink."""
-    from access_log_aggregator_spark.sources.tableio import SnapshotTable
-
-    root = tmp_path_factory.mktemp("agglegacy")
-    p = Pipeline(spark, root / "out", lookup_sdf)
-    p.process_batch(spark.createDataFrame(corpus.pages.iloc[:100]),
-                    batch_id="b1")
-    p.write_aggregates()
-    fp = p.routed_state_fingerprint()
-    for name in ("agg_by_host", "agg_by_status_bucket", "agg_by_window"):
-        SnapshotTable(root / "out" / name).set_properties(
-            source_state=repr(fp))
-    assert not p.aggregates_stale()
-
-
-def test_aggregates_stale_converges_on_empty_state(
-    spark, lookup_sdf, tmp_path_factory
-):
-    """An empty routed state (0-row commit, no data files) must still
-    converge: write_aggregates creates + stamps EMPTY aggregate tables, so
-    the heal loop goes quiet instead of reporting the missing tables stale
-    forever."""
-    from access_log_aggregator_spark.streaming.stream import PAGES_SCHEMA
-
-    root = tmp_path_factory.mktemp("aggempty")
-    p = Pipeline(spark, root / "out", lookup_sdf)
-    empty = spark.createDataFrame([], PAGES_SCHEMA)
-    res = p.process_batch(empty, batch_id="e1")
-    assert res.rows_in == 0
-    assert p.aggregates_stale()          # tables missing, routed exists
-    out = p.write_aggregates()
-    assert out == {"agg_by_host": 0, "agg_by_status_bucket": 0,
-                   "agg_by_window": 0}
-    assert not p.aggregates_stale()      # converged after ONE heal
-
-
 def test_checkpoint_batch_history_is_bounded(tmp_path):
     """The checkpoint cursor is last_snapshot_id; batches[] is diagnostic
     history, capped so the per-batch full-state rewrite never grows
