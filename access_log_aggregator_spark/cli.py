@@ -191,7 +191,6 @@ def _run_log_files(args, ap) -> int:
             # SnapshotTable/--stream path, not this mode.
             pipe = Pipeline(spark, out, lookup,
                             use_arrow_udf=not args.no_arrow_udf,
-                            salt_buckets=args.salt_buckets,
                             write_partitions=args.write_partitions)
             # sorted by the SAME canonical string embedded in the hash, so
             # flag order / spelling cannot change the marker
@@ -219,8 +218,8 @@ def _run_log_files(args, ap) -> int:
         else:
             # summary-only (the reference's exact behavior: no sinks) —
             # class counts ride the aggregation job via observe(), so the
-            # files scan once; the metric set is process_batch's own
-            # (observe_routed_classes), so the two modes count identically
+            # files scan once (with --out they come from the write tasks'
+            # file records; a test pins that both report the same counts)
             routed = build_routed(pages, lookup,
                                   use_arrow_udf=not args.no_arrow_udf)
             routed, obs = observe_routed_classes(routed, "logfile_counts")
@@ -245,20 +244,26 @@ def _run_log_files(args, ap) -> int:
 
 
 def _analyze_routed(rt, spark) -> None:
-    """Default-on stats + blooms for the routed sink: the write path stays
-    zero-driver-footer-read (executor-side Observation counts), and this
-    DISTRIBUTED sweep back-fills min/max/null bounds + host equality
-    blooms for the files each run just committed — so downstream point
-    lookups (read(where=[("host", "=", v)])) prune without a manual
-    analyze. A no-op when every live file already has stats (one manifest
-    read). The ``bloom_cols=host`` default is persisted only after a sweep
-    built it, so a failed sweep leaves the table's properties as they
-    were."""
+    """Heal the routed sink's statless files: files this release writes
+    carry their stats and host blooms from the write tasks' own records
+    (``Pipeline._append_partitioned``), so this is one manifest read and
+    no Spark job unless files committed statless by an earlier release
+    remain; those get min/max/null bounds + host equality blooms from a
+    DISTRIBUTED sweep, so downstream point lookups
+    (read(where=[("host", "=", v)])) prune without a manual analyze. The
+    ``bloom_cols`` default (``DEFAULT_ROUTED_BLOOM_COLS``, the columns the
+    write tasks bloom while the property is unset) is persisted only
+    after the sweep succeeded, so a failed sweep leaves the table's
+    properties as they were."""
+    from .plans.pipeline import DEFAULT_ROUTED_BLOOM_COLS
+
     try:
         default = "bloom_cols" not in rt.properties()
-        n_swept = rt.analyze(spark, bloom_cols=["host"] if default else None)
+        n_swept = rt.analyze(
+            spark,
+            bloom_cols=list(DEFAULT_ROUTED_BLOOM_COLS) if default else None)
         if default:
-            rt.set_properties(bloom_cols="host")
+            rt.set_properties(bloom_cols=",".join(DEFAULT_ROUTED_BLOOM_COLS))
         if n_swept:
             print(f"analyzed {n_swept} routed sink file(s) "
                   "(stats + host blooms)", file=sys.stderr)
@@ -295,7 +300,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="number of snapshots to split --generate data into")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--salt-buckets", type=int, default=None,
-                    help="enable explicit salted aggregation with N buckets")
+                    help="salt the summary-only --log-file aggregation "
+                         "over N buckets (skewed hosts); runs that write "
+                         "aggregate tables (--out/--data-dir/--pages-table/"
+                         "--stream) fold them unsalted and refuse it")
     ap.add_argument("--write-partitions", type=int, default=None, metavar="N",
                     help="explicit repartition(N, url) before the sink write "
                          "(balances write tasks / bounds file count under skew)")
@@ -353,11 +361,11 @@ def main(argv: list[str] | None = None) -> int:
                          "checkpoint marker is registered on the pages "
                          "table — see --retire-stream)")
     ap.add_argument("--no-analyze-routed", action="store_true",
-                    help="skip the default end-of-run distributed stats "
-                         "sweep over the routed sink (it records min/max/"
-                         "null bounds + host equality blooms for "
-                         "newly-committed files so point lookups prune; "
-                         "the write path itself stays zero-footer-read)")
+                    help="skip the end-of-run heal of routed-sink files "
+                         "committed without stats by earlier releases (a "
+                         "distributed sweep recording min/max/null bounds "
+                         "+ host equality blooms); files written now carry "
+                         "both from their write tasks either way")
     ap.add_argument("--analyze-pages", action="store_true",
                     help="record column statistics (min/max/null bounds) "
                          "for PAGES-table files committed without them — "
@@ -380,6 +388,14 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
+    if args.salt_buckets is not None and (
+            args.out or args.data_dir or args.pages_table or args.stream):
+        # fail fast, not inert: the aggregate tables come from the
+        # grouping-sets fold, which does not salt
+        ap.error("--salt-buckets only salts the summary-only --log-file "
+                 "aggregation: runs with --out/--data-dir/--pages-table/"
+                 "--stream fold the aggregate tables unsalted, so the "
+                 "option would have no effect")
     if args.compact_sort_by and args.compact_zorder_by:
         # fail fast: compact() raises ValueError for this combination, but
         # _compact_reporting downgrades maintenance errors to a "compaction
@@ -452,7 +468,6 @@ def main(argv: list[str] | None = None) -> int:
         lookup = spark.createDataFrame(generate_host_lookup(seed=args.seed))
         pipe = Pipeline(spark, args.out, lookup,
                         use_arrow_udf=not args.no_arrow_udf,
-                        salt_buckets=args.salt_buckets,
                         write_partitions=args.write_partitions)
         # mode-ownership guard, BOTH directions: --log-file already refuses
         # a snapshot-pipeline sink (see _run_log_files); the snapshot modes

@@ -108,14 +108,15 @@ class KLL:
             self._flips += 1
             survivors = buf[off::2]
             self.levels[i] = np.empty(0)
-            if i + 1 == len(self.levels):
+            grew = i + 1 == len(self.levels)
+            if grew:
                 self.levels.append(np.empty(0))
             self.levels[i + 1] = np.concatenate(
                 [self.levels[i + 1], survivors])
-            # capacities shrank for lower levels when a level was added;
-            # restart the scan so every level is re-checked under the
-            # new heights
-            i = 0 if survivors.size and i + 1 == len(self.levels) - 1 else i + 1
+            # capacities shrank for lower levels only when a level was
+            # added: restart the scan then, so every level is re-checked
+            # under the new heights; otherwise levels 0..i already fit
+            i = 0 if grew else i + 1
 
     def merge(self, other: "KLL") -> "KLL":
         if other.k != self.k:

@@ -62,6 +62,23 @@ STREAM_GLOB = "part-*.parquet"
 EXPIRED_MARKER_RETENTION = 10_000
 
 
+def write_parquet(table: pa.Table, dest) -> pq.FileMetaData:
+    """Write ``table`` as ONE parquet file and return its footer (the
+    ``metadata_collector`` copy: the caller's stats record costs no
+    read). Laid out like the Spark writer's files: no pandas or Arrow
+    schema metadata in the footer, and dictionary encoding only on the
+    columns that repeat values (``2 * distinct <= rows``, the Spark
+    writer's fallback rule) — a dictionary over unique urls or sums only
+    adds bytes. Shared by :meth:`SnapshotTable.overwrite_arrow` and the
+    routed sink's write tasks (``plans/pipeline.py``)."""
+    repeats = [c for c in table.column_names
+               if 2 * pc.count_distinct(table[c]).as_py() <= table.num_rows]
+    mc: list = []
+    pq.write_table(table, dest, metadata_collector=mc, store_schema=False,
+                   use_dictionary=repeats)
+    return mc[0]
+
+
 class CommitConflict(RuntimeError):
     """Optimistic-commit validation failed: the table advanced between when
     a maintenance operation captured its base state and when it tried to
@@ -970,23 +987,16 @@ class SnapshotTable:
         (truncate + append + set_properties would be three commits).
         Guarded by the ``expected_current`` CAS (the snapshot id the
         rewrite was computed from, 0 for an empty table): a concurrent
-        commit raises :class:`CommitConflict`. One file, written without
-        pandas or Arrow schema metadata in its footer. Not for streamed
-        tables: the old ``part-*`` files are deleted."""
+        commit raises :class:`CommitConflict`. One file, written by
+        :func:`write_parquet`. Not for streamed tables: the old ``part-*``
+        files are deleted."""
         from . import filestats
 
         dest = self.root / "data" / f"part-{uuid.uuid4().hex}.parquet"
-        # dictionary-encode only the columns that repeat values, as the
-        # Spark writer's fallback does: a dictionary over unique keys or
-        # sums only adds bytes
-        repeats = [c for c in table.column_names
-                   if 2 * pc.count_distinct(table[c]).as_py() <= table.num_rows]
-        mc: list = []
-        pq.write_table(table, dest, metadata_collector=mc, store_schema=False,
-                       use_dictionary=repeats)
+        md = write_parquet(table, dest)
         return self._commit_files(
             [dest], table.num_rows, None, expected_current=expected_current,
-            stats={str(dest): filestats.stats_from_metadata(mc[0])},
+            stats={str(dest): filestats.stats_from_metadata(md)},
             schema=_spark_schema_of_arrow(table.schema), overwrite=True,
             properties=properties)
 
@@ -1062,16 +1072,20 @@ class SnapshotTable:
 
         self._precheck_schema(df.schema)  # fail BEFORE running the write job
         staging = self.root / f"_staging-{uuid.uuid4().hex}"
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows")) \
-            .write.mode("overwrite").parquet(str(staging))
-        n = int(obs.get["rows"])
-        moved: list[Path] = []
-        for p in sorted(staging.glob("*.parquet")):
-            dest = self.root / "data" / f"part-{uuid.uuid4().hex}.parquet"
-            shutil.move(str(p), dest)
-            moved.append(dest)
-        shutil.rmtree(staging, ignore_errors=True)
+        try:
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("rows")) \
+                .write.mode("overwrite").parquet(str(staging))
+            n = int(obs.get["rows"])
+            moved: list[Path] = []
+            for p in sorted(staging.glob("*.parquet")):
+                dest = self.root / "data" / f"part-{uuid.uuid4().hex}.parquet"
+                shutil.move(str(p), dest)
+                moved.append(dest)
+        finally:
+            # a failed job leaves its attempts' partial files under
+            # _temporary/: nothing else would ever reclaim them
+            shutil.rmtree(staging, ignore_errors=True)
         return self._commit_files(moved, n, marker, schema=df.schema)
 
     def truncate(self) -> None:

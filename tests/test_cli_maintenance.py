@@ -406,11 +406,11 @@ def test_sort_by_and_zorder_by_conflict_fails_fast():
 
 
 def test_routed_sink_carries_stats_and_blooms_by_default(tmp_path):
-    """The end-of-run distributed sweep (default on, r5) leaves every live
-    routed-sink file with manifest stats + host equality blooms, so a
-    downstream point lookup prunes with NO manual analyze — while the
-    write path itself stays zero-footer-read. --no-analyze-routed opts
-    out (statless files, fail-open reads)."""
+    """Every live routed-sink file carries manifest stats + host equality
+    blooms, so a downstream point lookup prunes with NO manual analyze —
+    the write tasks return both with their file records, and the commit
+    stays zero-footer-read. --no-analyze-routed only skips healing files
+    committed statless by earlier releases, so it changes nothing here."""
     import sys as _sys
     from pathlib import Path as _P
 
@@ -440,12 +440,16 @@ def test_routed_sink_carries_stats_and_blooms_by_default(tmp_path):
     planned = t.data_files(where=[("host", "=", some_host)])
     assert 0 < len(planned) <= len(live)
 
-    # opt-out: a fresh layout run with --no-analyze-routed stays statless
+    # --no-analyze-routed: the files still carry stats and host blooms
     data2 = str(tmp_path / "data2")
     _run_cli("--generate", "600", "--data-dir", data2, "--from-start",
              "--no-analyze-routed")
     t2 = SnapshotTable(_P(data2) / "out" / "routed")
-    assert t2.data_files() and not t2._file_stats()
+    live2, stats2 = t2.data_files(), t2._file_stats()
+    assert live2 and all(f in stats2 for f in live2)
+    for f in live2:
+        assert "host" in stats2[f].get("bloomed", []), stats2[f]
+    assert t2.data_files(where=[("host", "=", "host00.example.net")]) == []
 
 
 def test_failed_routed_sweep_leaves_properties_unchanged(tmp_path,
@@ -474,3 +478,58 @@ def test_failed_routed_sweep_leaves_properties_unchanged(tmp_path,
                         len(bloom_cols or []))
     _analyze_routed(t, spark=None)
     assert t.bloom_cols() == ["host"]
+
+
+def test_salt_buckets_refused_where_it_has_no_effect(tmp_path, capsys):
+    """--salt-buckets only salts the summary-only --log-file aggregation:
+    combined with a run that writes aggregate tables (which the fold
+    computes unsalted) it exits 2 before any Spark work."""
+    import pytest
+
+    sys.path.insert(0, str(REPO))
+    from access_log_aggregator_spark.cli import main
+
+    log = tmp_path / "a.log"
+    log.write_text("{}\n")
+    for extra in (["--log-file", str(log), "--out", str(tmp_path / "o")],
+                  ["--log-file", str(log), "--data-dir", str(tmp_path / "d")],
+                  ["--pages-table", str(tmp_path / "p"), "--out",
+                   str(tmp_path / "o"), "--checkpoint", str(tmp_path / "c")],
+                  ["--generate", "10", "--data-dir", str(tmp_path / "d")],
+                  ["--data-dir", str(tmp_path / "d"), "--stream"]):
+        with pytest.raises(SystemExit) as ei:
+            main([*extra, "--salt-buckets", "4"])
+        assert ei.value.code == 2, extra
+        assert "--salt-buckets only salts" in capsys.readouterr().err
+    assert not any(tmp_path.glob("[odpc]"))
+
+
+def test_log_file_counts_agree_with_and_without_sinks(tmp_path):
+    """The summary-only --log-file path counts classes with observe()
+    metrics, --log-file --out with the write tasks' file records: on a log
+    with parsed, unparsed and bot lines both report the same rows_in and
+    sink_counts, and the salted summary equals the sink-backed one. (A
+    log line cannot reach the error class: its html is the line itself.)"""
+    log = tmp_path / "a.log"
+    good = ('{"time":"2025-01-01T00:00:%02dZ","host":"%s",'
+            '"status_code":%d,"duration":0.25}')
+    lines = [(good % (i, f"h{i % 3}.com", 200 + 100 * (i % 2))).encode()
+             for i in range(9)]
+    lines += [b"not json", b"", b'{"time":"x"}',
+              (good % (0, "crawler.example.ai", 200)).encode()]
+    log.write_bytes(b"\n".join(lines) + b"\n")
+
+    def run(*extra):
+        out = _run_cli("--log-file", str(log), *extra)
+        counts, *table = out.stdout.strip().splitlines()
+        # the table's title carries the wall-clock time
+        return json.loads(counts), [ln for ln in table
+                                    if "Summary as of" not in ln]
+
+    alone, table_alone = run("--salt-buckets", "4")
+    sunk, table_sunk = run("--out", str(tmp_path / "out"))
+    assert alone["rows_in"] == sunk["rows_in"] == len(lines)
+    assert alone["sink_counts"] == sunk["sink_counts"]
+    c = alone["sink_counts"]
+    assert c == {"parsed": 9, "unparsed": 3, "bot": 1, "error": 0}
+    assert table_alone == table_sunk

@@ -226,3 +226,76 @@ def test_misspelled_group_column_raises_on_the_driver(spark):
         kll_merge(sk, ["hots"])
     with pytest.raises(ValueError, match="hots"):
         kll_quantiles(sk, [0.5], ["hots"])
+
+
+#: captured from the level-scan that restarted after every compaction into
+#: the top level; the scan that restarts only when a level is added must
+#: keep every level (and so every quantile) bit-identical
+_GOLDEN = {
+    "a": (53666, [0, 0, 0, 0, 0, 0, 0, 0, 7, 0, 0, 26], "d7127ba7482a8267",
+           ["0x1.9cf7ca74d7e56p-4", "0x1.056990bc8d057p-2",
+            "0x1.046be0f220c18p-1", "0x1.fee3eadc4efd4p-1",
+            "0x1.050ae57f06fd3p+1", "0x1.a2c47a4c5fa27p+1",
+            "0x1.e41792a204fa0p+2", "0x1.0da2f3ad7ef4dp+4"]),
+    "b": (108954, [0, 0, 0, 0, 0, 0, 0, 6, 15, 0, 27, 37], "0144e47935ab5d3a",
+           ["0x1.858d9bd014e00p-6", "0x1.4c9e436cb0e40p-4",
+            "0x1.09f8fdea65244p-2", "0x1.013eb24343095p-1",
+            "0x1.8833959b9b6bfp-1", "0x1.c89a5f707ffa0p-1",
+            "0x1.da89372d9f79ap-1", "0x1.f779bde7a7e1dp-1"]),
+    "c": (200000, [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 195], "eeaa962daa6d5c7b",
+           ["-0x1.30b99578aac52p+1", "-0x1.45d835df012ebp+0",
+            "-0x1.5a801fbe2a542p-1", "-0x1.72a4cfe907dcep-10",
+            "0x1.5cce8bd6b6d8ep-1", "0x1.49e36829ae5f7p+0",
+            "0x1.a946210c2fa10p+0", "0x1.3285f8ab5bd85p+1"]),
+    "d": (58768, [0, 0, 0, 0, 0, 0, 23, 0, 0, 112], "4e119764a9481e65",
+           ["0x1.de0d0e8fe92c6p-7", "0x1.acdd5cf9cf86ep-4",
+            "0x1.1f514328df46ep-2", "0x1.62a30626c24c8p-1",
+            "0x1.58db96716a724p+0", "0x1.20297520e42dap+1",
+            "0x1.8000a1304a8bap+1", "0x1.127a7d45d34d4p+2"]),
+    "ab": (162620, [0, 0, 0, 0, 0, 0, 0, 6, 0, 11, 0, 13, 32], "ad034df4aa2a53eb",
+           ["0x1.858d9bd014e00p-6", "0x1.31e4256096b5cp-3",
+            "0x1.336d2eed2cbf2p-2", "0x1.31b87280c635fp-1",
+            "0x1.be228ea840466p-1", "0x1.a4516f6dedfe6p+0",
+            "0x1.7a95282811a48p+1", "0x1.0da2f3ad7ef4dp+4"]),
+    "ba": (162620, [0, 0, 0, 0, 0, 0, 0, 6, 0, 11, 0, 14, 31], "0c0dd4a3c2f30667",
+           ["0x1.9e4e5b4473380p-6", "0x1.d30478a995cd0p-4",
+            "0x1.32400f74b25dcp-2", "0x1.27f47278c375fp-1",
+            "0x1.c89a5f707ffa0p-1", "0x1.bbed173eefec8p+0",
+            "0x1.a2c47a4c5fa27p+1", "0x1.e41792a204fa0p+2"]),
+}
+
+
+def _golden_sketches() -> dict:
+    rng = np.random.default_rng(20260101)
+    a = KLL(k=50)
+    for _ in range(60):
+        a.update_batch(rng.lognormal(size=int(rng.integers(1, 2000))))
+    b = KLL(k=50)
+    for _ in range(40):
+        b.update_batch(rng.random(int(rng.integers(1, 5000))))
+    c = KLL()
+    c.update_batch(rng.standard_normal(200_000))
+    d = KLL()
+    for _ in range(300):
+        d.update_batch(rng.exponential(size=int(rng.integers(1, 400))))
+    ab = KLL.from_row(*a.to_row()).merge(b)
+    ba = KLL.from_row(*b.to_row()).merge(a)
+    return {"a": a, "b": b, "c": c, "d": d, "ab": ab, "ba": ba}
+
+
+def test_compaction_levels_match_golden():
+    """Fixed-seed streams (batched updates, one large batch, merges in
+    both orders): level sizes, level contents (sha256 prefix) and
+    quantiles equal the captured values exactly."""
+    import hashlib
+
+    for name, s in _golden_sketches().items():
+        h = hashlib.sha256()
+        for buf in s.levels:
+            h.update(np.ascontiguousarray(buf, dtype=np.float64).tobytes())
+            h.update(b"|")
+        n, sizes, digest, qs = _GOLDEN[name]
+        assert s.n == n, name
+        assert [int(x.size) for x in s.levels] == sizes, name
+        assert h.hexdigest()[:16] == digest, name
+        assert [float(s.quantile(q)).hex() for q in QS] == qs, name
