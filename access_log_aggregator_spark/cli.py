@@ -17,6 +17,13 @@ on Spark terms:
                             invocations (or use the streaming mode) for the
                             periodic-emit behavior
 
+``main`` runs five phases in order, each a function below: parse and
+validate (no Spark; a layout another input mode owns is refused here, by
+``plans.checkpoint.check_sink_owner``) -> open the tables and generate ->
+ingest (batch, stream drain, live ticker, or the --log-file scan) ->
+maintain -> report (aggregate fold, routed-sink heal, counts JSON line,
+summary table).
+
 Run:  spark-submit --py-files alas.zip -m access_log_aggregator_spark.cli ...
 or:   python -m access_log_aggregator_spark.cli --generate 20000 ...
 """
@@ -126,159 +133,7 @@ def _drain_live_query(q, timeout_s: float = 300.0) -> None:
         raise exc
 
 
-def _run_log_files(args, ap) -> int:
-    """The reference's literal input mode: ``accessAgg -file a.log`` ->
-    ``--log-file a.log``. Lines parse through the SAME dual-engine
-    parse/validate/route chain (extraction is the identity on a bare log
-    line — byte-parity pinned on the reference corpus); output is the
-    reference-format summary table plus the counts JSON. With --out (or
-    --data-dir) the batch also commits to the routed sink + aggregate
-    tables under an idempotence marker derived from the files'
-    (path, size, mtime) signature, so re-running over unchanged files is
-    a no-op and appending to a log re-commits exactly the new state."""
-    import hashlib
-
-    from .operators.aggregate import aggregate_by_host
-    from .plans.pipeline import (
-        Pipeline,
-        build_routed,
-        observe_routed_classes,
-        summary_text_from_agg,
-    )
-    from .session import get_spark
-    from .sources.logfiles import canonical_paths, read_log_files
-    from .sources.pages import generate_host_lookup
-    from .sources.tableio import SnapshotTable
-    from pyspark.sql import functions as F
-
-    from .functions import extract as X
-
-    files = canonical_paths(args.log_file)
-    missing = [str(p) for p in files if not p.exists()]
-    if missing:
-        ap.error(f"--log-file path(s) not found: {missing}")
-    out = args.out or (str(Path(args.data_dir) / "out")
-                       if args.data_dir else None)
-    if out:
-        # refuse an output layout another mode owns BEFORE touching it:
-        # this mode REBUILDS the routed sink (truncate + recommit), which
-        # would destroy a batch/stream pipeline's accumulated state while
-        # its checkpoint still claims the rows were routed
-        routed_root = SnapshotTable(Path(out) / "routed")
-        if routed_root.exists():
-            foreign = sorted(m for m in routed_root.committed_markers()
-                             if not m.startswith("logfiles-"))
-            if foreign:
-                ap.error(
-                    f"{out}/routed is managed by the snapshot pipeline "
-                    f"(markers {foreign[:3]}{'...' if len(foreign) > 3 else ''}"
-                    "): --log-file rebuilds the routed sink from the "
-                    "files' current state and would destroy those rows. "
-                    "Point --out at a separate directory."
-                )
-
-    spark = get_spark(master=args.master)
-    try:
-        pages = read_log_files(spark, files)
-        lookup = spark.createDataFrame(generate_host_lookup(seed=args.seed))
-        classes = X.ALL_CLASSES
-        if out:
-            # Sink semantics mirror the reference's -from-start rebuild:
-            # each run represents the files' CURRENT full state, so a
-            # changed state truncates and re-commits (old lines would
-            # otherwise duplicate), while an UNCHANGED state is a marker
-            # no-op. Incremental tailing of growing logs is the
-            # SnapshotTable/--stream path, not this mode.
-            pipe = Pipeline(spark, out, lookup,
-                            use_arrow_udf=not args.no_arrow_udf,
-                            write_partitions=args.write_partitions)
-            # sorted by the SAME canonical string embedded in the hash, so
-            # flag order / spelling cannot change the marker
-            sig = hashlib.md5("|".join(
-                f"{p}:{p.stat().st_size}:{p.stat().st_mtime_ns}"
-                for p in sorted(files)).encode()).hexdigest()[:12]
-            marker = f"logfiles-{sig}"
-            if marker in pipe.routed_table.committed_markers():
-                counts = {c: 0 for c in classes}
-                rows_in = 0
-            else:
-                pipe.routed_table.truncate()
-                r = pipe.process_batch(pages, batch_id=marker)
-                counts = dict(r.sink_counts)
-                rows_in = r.rows_in
-            # every run: the fold rebuilds after the truncate (a now-EMPTY
-            # file state empties the tables too), heals a crash that hit
-            # a previous run after its routed commit, and is idle otherwise
-            agg_rows = pipe.write_aggregates()
-            # render from the just-written agg_by_host table (tiny scan)
-            # instead of re-aggregating the routed sink
-            agg_t = SnapshotTable(Path(out) / "agg_by_host")
-            summary = summary_text_from_agg(
-                agg_t.read(spark) if agg_t.exists() else None)
-        else:
-            # summary-only (the reference's exact behavior: no sinks) —
-            # class counts ride the aggregation job via observe(), so the
-            # files scan once (with --out they come from the write tasks'
-            # file records; a test pins that both report the same counts)
-            routed = build_routed(pages, lookup,
-                                  use_arrow_udf=not args.no_arrow_udf)
-            routed, obs = observe_routed_classes(routed, "logfile_counts")
-            valid = routed.filter(
-                F.col("match_class").isin(X.CLASS_PARSED, X.CLASS_BOT))
-            summary = summary_text_from_agg(
-                aggregate_by_host(valid, args.salt_buckets))
-            got = obs.get
-            counts = {c: int(got.get(c, 0)) for c in classes}
-            rows_in = int(got.get("rows_in", 0))
-            agg_rows = {}
-        print(json.dumps({
-            "files": len(args.log_file), "rows_in": rows_in,
-            "sink_counts": counts,
-            "malformed": counts[X.CLASS_UNPARSED] + counts[X.CLASS_ERROR],
-            "aggregate_tables": agg_rows,
-        }))
-        print(summary)
-        return 0
-    finally:
-        spark.stop()
-
-
-def _analyze_routed(rt, spark) -> None:
-    """Heal the routed sink's statless files: files this release writes
-    carry their stats and host blooms from the write tasks' own records
-    (``Pipeline._append_partitioned``), so this is one manifest read and
-    no Spark job unless files committed statless by an earlier release
-    remain; those get min/max/null bounds + host equality blooms from a
-    DISTRIBUTED sweep, so downstream point lookups
-    (read(where=[("host", "=", v)])) prune without a manual analyze. The
-    ``bloom_cols`` default (``DEFAULT_ROUTED_BLOOM_COLS``, the columns the
-    write tasks bloom while the property is unset) is persisted only
-    after the sweep succeeded, so a failed sweep leaves the table's
-    properties as they were."""
-    from .plans.pipeline import DEFAULT_ROUTED_BLOOM_COLS
-
-    try:
-        default = "bloom_cols" not in rt.properties()
-        n_swept = rt.analyze(
-            spark,
-            bloom_cols=list(DEFAULT_ROUTED_BLOOM_COLS) if default else None)
-        if default:
-            rt.set_properties(bloom_cols=",".join(DEFAULT_ROUTED_BLOOM_COLS))
-        if n_swept:
-            print(f"analyzed {n_swept} routed sink file(s) "
-                  "(stats + host blooms)", file=sys.stderr)
-    except Exception as e:  # noqa: BLE001 - default-on optimization
-        # the sweep is an OPTIMIZATION over already-committed data:
-        # a transient failure (executor loss, a file expired by
-        # concurrent maintenance between manifest read and footer
-        # task) must not crash an otherwise-successful run after
-        # its rows are durably committed, nor skip the summary
-        # JSON — reads fail open on missing stats, and the
-        # next run's sweep (or --analyze-pages-style rerun) heals
-        print(f"routed sink analyze skipped: {e}", file=sys.stderr)
-
-
-def main(argv: list[str] | None = None) -> int:
+def _parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="access-log-aggregator-spark")
     ap.add_argument("--log-file", action="append", metavar="PATH",
                     help="raw newline-JSON access-log file (repeatable) — "
@@ -360,12 +215,6 @@ def main(argv: list[str] | None = None) -> int:
                          "pre-compaction snapshots (refuses while a stream "
                          "checkpoint marker is registered on the pages "
                          "table — see --retire-stream)")
-    ap.add_argument("--no-analyze-routed", action="store_true",
-                    help="skip the end-of-run heal of routed-sink files "
-                         "committed without stats by earlier releases (a "
-                         "distributed sweep recording min/max/null bounds "
-                         "+ host equality blooms); files written now carry "
-                         "both from their write tasks either way")
     ap.add_argument("--analyze-pages", action="store_true",
                     help="record column statistics (min/max/null bounds) "
                          "for PAGES-table files committed without them — "
@@ -386,8 +235,19 @@ def main(argv: list[str] | None = None) -> int:
                          "(the -interval ticker analog, flags.go:13); default is "
                          "an AvailableNow drain")
     ap.add_argument("--master", default=None)
-    args = ap.parse_args(argv)
+    return ap
 
+
+def _parse_args(argv: list[str] | None) -> argparse.Namespace:
+    """Phase 1, no Spark: parse and validate the command line, derive the
+    layout paths, and refuse a layout another input mode owns
+    (:func:`~.plans.checkpoint.check_sink_owner`). Every exit-2 error
+    happens here, before a session starts or ``--generate`` writes."""
+    from .plans.checkpoint import SinkOwnershipError, check_sink_owner
+    from .sources.logfiles import canonical_paths
+
+    ap = _parser()
+    args = ap.parse_args(argv)
     if args.salt_buckets is not None and (
             args.out or args.data_dir or args.pages_table or args.stream):
         # fail fast, not inert: the aggregate tables come from the
@@ -403,13 +263,7 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("--compact-sort-by and --compact-zorder-by are mutually "
                  "exclusive: a z-order curve over the sort columns replaces "
                  "the linear sort (pick one clustering strategy)")
-
-    from .plans.checkpoint import Checkpoint, run_incremental
-    from .plans.pipeline import Pipeline
-    from .session import get_spark
-    from .sources.pages import generate_host_lookup, generate_pages
-    from .sources.tableio import SnapshotTable
-
+    root = Path(args.data_dir) if args.data_dir else None
     if args.log_file:
         if (args.generate or args.stream or args.maintenance_only
                 or args.pages_table):
@@ -420,7 +274,7 @@ def main(argv: list[str] | None = None) -> int:
                 or args.compact_pages or args.expire_pages_snapshots
                 or args.analyze_pages):
             # fail loud, not silent: these run in the snapshot-pipeline path
-            # only, and --log-file returning before them would drop the
+            # only, and the --log-file path skipping them would drop the
             # user's requested maintenance with no indication
             ap.error("--log-file does not run maintenance flags (--compact/"
                      "--expire-snapshots/--retire-stream/--compact-pages/"
@@ -428,264 +282,329 @@ def main(argv: list[str] | None = None) -> int:
                      "sink is rebuilt per run, so there is nothing to "
                      "compact, expire or analyze — "
                      "run them with --pages-table/--data-dir")
-        return _run_log_files(args, ap)
+        args.log_paths = canonical_paths(args.log_file)
+        missing = [str(p) for p in args.log_paths if not p.exists()]
+        if missing:
+            ap.error(f"--log-file path(s) not found: {missing}")
+        args.out = args.out or (str(root / "out") if root else None)
+        args.stream_ckpt = None
+        mode = "logfiles" if args.out else None
+    else:
+        if args.generate and not root:
+            ap.error("--generate requires --data-dir")
+        if root:
+            # --data-dir derives the three paths with or without
+            # --generate, so maintenance-only runs (--retire-stream /
+            # --compact* / --expire*) address the same layout a
+            # --generate run created
+            args.pages_table = args.pages_table or str(root / "pages")
+            args.out = args.out or str(root / "out")
+            args.checkpoint = args.checkpoint or str(root / "checkpoint.json")
+        if not (args.pages_table and args.out and args.checkpoint):
+            ap.error("--pages-table, --out and --checkpoint are required "
+                     "(or use --generate)")
+        # the streaming modes' checkpoint, derived the same way for
+        # --retire-stream in maintenance-only runs
+        args.stream_ckpt = Path(args.checkpoint).with_suffix(".stream_ckpt")
+        mode = (None if args.maintenance_only
+                else "stream" if args.stream else "batch")
+    if mode:
+        try:
+            check_sink_owner(mode, args.out, pages=args.pages_table,
+                             checkpoint=args.checkpoint,
+                             from_start=args.from_start,
+                             stream_checkpoint=args.stream_ckpt)
+        except SinkOwnershipError as e:
+            ap.error(str(e))
+    return args
 
-    if args.generate and not args.data_dir:
-        ap.error("--generate requires --data-dir")
-    if args.data_dir:
-        # --data-dir derives the three paths with or without --generate, so
-        # maintenance-only runs (--retire-stream / --compact* / --expire*)
-        # address the same layout a --generate run created
-        root = Path(args.data_dir)
-        args.pages_table = args.pages_table or str(root / "pages")
-        args.out = args.out or str(root / "out")
-        args.checkpoint = args.checkpoint or str(root / "checkpoint.json")
 
-    if not (args.pages_table and args.out and args.checkpoint):
-        ap.error("--pages-table, --out and --checkpoint are required (or use --generate)")
+def _lookup(spark, args):
+    """The host dimension the enrich stage joins."""
+    from .sources.pages import generate_host_lookup
+
+    return spark.createDataFrame(generate_host_lookup(seed=args.seed))
+
+
+def _pipeline(spark, args):
+    """The routed sink + aggregate tables under ``args.out``."""
+    from .plans.pipeline import Pipeline
+
+    return Pipeline(spark, args.out, _lookup(spark, args),
+                    use_arrow_udf=not args.no_arrow_udf,
+                    write_partitions=args.write_partitions)
+
+
+def _open_tables(spark, args):
+    """Phase 2: open the pages table (appending the ``--generate`` corpus
+    first) and the routed sink."""
+    from .sources.pages import generate_pages
+    from .sources.tableio import SnapshotTable
+
+    pages_table = SnapshotTable.create(args.pages_table, "pages")
+    if args.generate:
+        pdf = generate_pages(args.generate, seed=args.seed)
+        step = (len(pdf) + args.snapshots - 1) // args.snapshots
+        before = pages_table.current_snapshot_id() or 0
+        for lo in range(0, len(pdf), step):
+            pages_table.append_pandas(pdf.iloc[lo: lo + step],
+                                      marker=f"gen-{args.seed}-{lo}")
+        new = (pages_table.current_snapshot_id() or 0) - before
+        if new:
+            print(f"generated {len(pdf)} pages into {new} snapshots",
+                  file=sys.stderr)
+        else:
+            # same seed + same offsets => same idempotence markers: the
+            # whole generate was deduplicated against earlier commits
+            print(f"generate: all {args.snapshots} snapshots already "
+                  f"committed (markers gen-{args.seed}-*), nothing "
+                  "appended", file=sys.stderr)
+    return pages_table, _pipeline(spark, args)
+
+
+def _ingest(spark, args, pages_table, pipe) -> list:
+    """Phase 3: route the unprocessed snapshots — batch (the checkpointed
+    cursor), stream drain, or the live ticker; nothing in a
+    maintenance-only run. Returns this run's BatchResults."""
+    if args.maintenance_only:
+        return []
+    if not args.stream:
+        from .plans.checkpoint import Checkpoint, run_incremental
+
+        return run_incremental(spark, pages_table, pipe,
+                               Checkpoint(args.checkpoint),
+                               from_start=args.from_start)
+    if not args.trigger_interval:
+        from .streaming.stream import run_streaming
+
+        return run_streaming(spark, pages_table, pipe, args.stream_ckpt)
+    # live ticker: run until SIGINT/SIGTERM, then drain the in-flight
+    # batch before the final summary (the reference's signal.NotifyContext
+    # + drain loop, main.go:23 + aggregate.go:28-41). A handler + 1 s
+    # awaitTermination poll keeps the signal out of the blocking py4j call.
+    import signal
+
+    from .streaming.stream import start_live_stream
+
+    stopping: list[int] = []
+    for sig in (signal.SIGINT, signal.SIGTERM):
+        signal.signal(sig, lambda signum, _frame: stopping.append(signum))
+    q, processed = start_live_stream(spark, pages_table, pipe,
+                                     args.stream_ckpt,
+                                     processing_time=args.trigger_interval)
+    while q.isActive and not stopping:
+        q.awaitTermination(1)
+    if not stopping:
+        # the query terminated on its own: a failure landing between
+        # awaitTermination's timeout return and the isActive check exits
+        # the loop without raising — surface it instead of printing a
+        # healthy summary
+        exc = q.exception()
+        if exc is not None:
+            raise exc
+        return processed
+    print("Gracefully shutting down...", file=sys.stderr)
+    # a second Ctrl-C/TERM now force-interrupts: the drain below must
+    # never leave the process unkillable
+    for sig in (signal.SIGINT, signal.SIGTERM):
+        signal.signal(sig, signal.SIG_DFL)
+    # stop() alone would CANCEL the in-flight micro-batch (its rows would
+    # miss the final summary, though the idempotence markers keep the
+    # resume safe); the drain helper stops at the micro-batch boundary
+    # instead and re-raises a stream failure as a failure.
+    _drain_live_query(q)
+    return processed
+
+
+def _expire_reporting(table, label: str, flag: str) -> None:
+    """Run ``table.expire_snapshots``. A registered stream checkpoint
+    makes expiry refuse (it would delete part-* files the checkpoint may
+    still need); that is a clean maintenance outcome, not a crash —
+    report and move on."""
+    try:
+        gone = table.expire_snapshots()
+        print(f"expired {len(gone)} {label}data file(s)", file=sys.stderr)
+    except RuntimeError as e:
+        print(f"{flag} refused: {e}", file=sys.stderr)
+
+
+def _maintain(spark, args, pages_table, pipe) -> None:
+    """Phase 4: the maintenance flags, in a fixed order. No cursor moves.
+    (--compact/--expire-snapshots target the ROUTED sink; the pages table
+    the CLI's own stream reads is --compact-pages/--expire-pages-snapshots.)"""
+    layout = dict(sort_by=args.compact_sort_by,
+                  zorder_by=args.compact_zorder_by, spark=spark)
+    if args.compact:
+        # no marker: compaction is safe to redo — a directory is only
+        # rewritten when it holds >= 2 files below the target size, so a
+        # compacted table is a true no-op (no growth); a constant marker
+        # would silently turn every later run into a no-op
+        _compact_reporting(pipe.routed_table, "routed sink",
+                           args.compact_rows_per_file, **layout)
+    if args.retire_stream:
+        # works in maintenance-only runs too (no --stream): the marker
+        # belongs to the PAGES table
+        removed = pages_table.unregister_stream(args.stream_ckpt)
+        print(f"retired stream checkpoint {args.stream_ckpt}" if removed
+              else f"no stream marker for {args.stream_ckpt}",
+              file=sys.stderr)
+    if args.expire_snapshots:
+        _expire_reporting(pipe.routed_table, "", "expire-snapshots")
+    if args.compact_pages:
+        _compact_reporting(pages_table, "pages table",
+                           args.compact_rows_per_file, **layout)
+    if args.expire_pages_snapshots:
+        _expire_reporting(pages_table, "pages ", "expire-pages-snapshots")
+    if args.analyze_pages:
+        n_analyzed = pages_table.analyze(spark)
+        print(f"analyzed {n_analyzed} pages data file(s)", file=sys.stderr)
+
+
+def _ingest_log_files(spark, args):
+    """Phase 3 of the reference's literal input mode: ``accessAgg -file
+    a.log`` -> ``--log-file a.log``. Lines parse through the SAME
+    dual-engine parse/validate/route chain (extraction is the identity on
+    a bare log line — byte-parity pinned on the reference corpus). With
+    --out (or --data-dir) the batch commits to the routed sink under an
+    idempotence marker derived from the files' (path, size, mtime)
+    signature, so re-running over unchanged files is a no-op and
+    appending to a log re-commits exactly the new state. Returns
+    ``(pipe, results, summary)``: the pipeline (None when summary-only),
+    this run's BatchResults, and the summary text when it is not read
+    from the aggregate table."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from .functions import extract as X
+    from .operators.aggregate import aggregate_by_host
+    from .plans.checkpoint import mint_marker
+    from .plans.pipeline import (
+        BatchResult,
+        build_routed,
+        observe_routed_classes,
+        summary_text_from_agg,
+    )
+    from .sources.logfiles import read_log_files
+
+    pages = read_log_files(spark, args.log_paths)
+    if args.out:
+        # Sink semantics mirror the reference's -from-start rebuild: each
+        # run represents the files' CURRENT full state, so a changed state
+        # truncates and re-commits (old lines would otherwise duplicate),
+        # while an UNCHANGED state is a marker no-op. Incremental tailing
+        # of growing logs is the SnapshotTable/--stream path, not this
+        # mode. Sorted by the SAME canonical string embedded in the hash,
+        # so flag order / spelling cannot change the marker.
+        pipe = _pipeline(spark, args)
+        marker = mint_marker("logfiles", hashlib.md5("|".join(
+            f"{p}:{p.stat().st_size}:{p.stat().st_mtime_ns}"
+            for p in sorted(args.log_paths)).encode()).hexdigest()[:12])
+        if marker in pipe.routed_table.committed_markers():
+            return pipe, [], None
+        pipe.routed_table.truncate()
+        return pipe, [pipe.process_batch(pages, batch_id=marker)], None
+    # summary-only (the reference's exact behavior: no sinks) — class
+    # counts ride the aggregation job via observe(), so the files scan
+    # once (with --out they come from the write tasks' file records; a
+    # test pins that both report the same counts)
+    routed, obs = observe_routed_classes(
+        build_routed(pages, _lookup(spark, args),
+                     use_arrow_udf=not args.no_arrow_udf),
+        "logfile_counts")
+    valid = routed.filter(
+        F.col("match_class").isin(X.CLASS_PARSED, X.CLASS_BOT))
+    summary = summary_text_from_agg(
+        aggregate_by_host(valid, args.salt_buckets))
+    got = obs.get
+    counts = {c: int(got.get(c, 0)) for c in X.ALL_CLASSES}
+    return None, [BatchResult("summary-only", None, counts,
+                              rows_in=int(got.get("rows_in", 0)))], summary
+
+
+def _analyze_routed(rt, spark) -> None:
+    """Heal the routed sink's statless files: files this release writes
+    carry their stats and host blooms from the write tasks' own records
+    (``Pipeline._append_partitioned``), so this is one manifest read and
+    no Spark job unless files committed statless by an earlier release
+    remain; those get min/max/null bounds + host equality blooms from a
+    DISTRIBUTED sweep, so downstream point lookups
+    (read(where=[("host", "=", v)])) prune without a manual analyze. The
+    ``bloom_cols`` default (``DEFAULT_ROUTED_BLOOM_COLS``, the columns the
+    write tasks bloom while the property is unset) is persisted only
+    after the sweep succeeded, so a failed sweep leaves the table's
+    properties as they were."""
+    from .plans.pipeline import DEFAULT_ROUTED_BLOOM_COLS
+
+    try:
+        default = "bloom_cols" not in rt.properties()
+        n_swept = rt.analyze(
+            spark,
+            bloom_cols=list(DEFAULT_ROUTED_BLOOM_COLS) if default else None)
+        if default:
+            rt.set_properties(bloom_cols=",".join(DEFAULT_ROUTED_BLOOM_COLS))
+        if n_swept:
+            print(f"analyzed {n_swept} routed sink file(s) "
+                  "(stats + host blooms)", file=sys.stderr)
+    except Exception as e:  # noqa: BLE001 - default-on optimization
+        # the sweep is an OPTIMIZATION over already-committed data:
+        # a transient failure (executor loss, a file expired by
+        # concurrent maintenance between manifest read and footer
+        # task) must not crash an otherwise-successful run after
+        # its rows are durably committed, nor skip the summary
+        # JSON — reads fail open on missing stats, and the
+        # next run's sweep (or --analyze-pages-style rerun) heals
+        print(f"routed sink analyze skipped: {e}", file=sys.stderr)
+
+
+def _report(spark, line: dict, results: list, pipe, summary) -> int:
+    """Phase 5: fold the aggregate tables (every run: folds this run's
+    batches, heals a previous run that crashed after its routed commit,
+    and is idle — no Spark job — when the tables already cover the sink),
+    heal the routed sink's statless files, print the counts JSON line,
+    then the reference's final summary table (print.go:26-49), rendered
+    from the just-folded agg_by_host table — a tiny scan — instead of
+    re-aggregating the whole routed sink. ``line`` holds the mode's
+    leading key; ``summary`` is the text when there is no pipeline."""
+    from .functions import extract as X
+    from .plans.pipeline import summary_text_from_agg
+    from .sources.tableio import SnapshotTable
+
+    counts = {c: 0 for c in X.ALL_CLASSES}
+    for r in results:
+        for k, v in r.sink_counts.items():
+            counts[k] += v
+    line.update(rows_in=sum(r.rows_in for r in results), sink_counts=counts,
+                malformed=counts[X.CLASS_UNPARSED] + counts[X.CLASS_ERROR],
+                aggregate_tables={})
+    if pipe is not None:
+        line["aggregate_tables"] = pipe.write_aggregates()
+        _analyze_routed(pipe.routed_table, spark)
+        agg_t = SnapshotTable(pipe.out_root / "agg_by_host")
+        summary = summary_text_from_agg(
+            agg_t.read(spark) if agg_t.exists() else None)
+    print(json.dumps(line))
+    print(summary)
+    return 0
+
+
+def main(argv: list[str] | None = None) -> int:
+    """Run the phases in order: parse and validate (no Spark) -> open the
+    tables and generate -> ingest -> maintain -> report."""
+    args = _parse_args(argv)
+    from .session import get_spark
 
     spark = get_spark(master=args.master)
     try:
-        pages_table = SnapshotTable.create(args.pages_table, "pages")
-        if args.generate:
-            pdf = generate_pages(args.generate, seed=args.seed)
-            step = (len(pdf) + args.snapshots - 1) // args.snapshots
-            before = pages_table.current_snapshot_id() or 0
-            for lo in range(0, len(pdf), step):
-                pages_table.append_pandas(pdf.iloc[lo: lo + step],
-                                          marker=f"gen-{args.seed}-{lo}")
-            new = (pages_table.current_snapshot_id() or 0) - before
-            if new:
-                print(f"generated {len(pdf)} pages into {new} snapshots",
-                      file=sys.stderr)
-            else:
-                # same seed + same offsets => same idempotence markers: the
-                # whole generate was deduplicated against earlier commits
-                print(f"generate: all {args.snapshots} snapshots already "
-                      f"committed (markers gen-{args.seed}-*), nothing "
-                      "appended", file=sys.stderr)
-
-        lookup = spark.createDataFrame(generate_host_lookup(seed=args.seed))
-        pipe = Pipeline(spark, args.out, lookup,
-                        use_arrow_udf=not args.no_arrow_udf,
-                        write_partitions=args.write_partitions)
-        # mode-ownership guard, BOTH directions: --log-file already refuses
-        # a snapshot-pipeline sink (see _run_log_files); the snapshot modes
-        # must equally refuse a --log-file-managed sink — appending
-        # pages-snap-*/stream-* rows into it would mix two corpora in one
-        # routed table, and the NEXT --log-file run would then error on the
-        # foreign markers after the corruption already happened. And
-        # --stream must refuse a batch-managed sink (the mirror of the
-        # batch-side stream-cursor guard below): a fresh stream checkpoint
-        # lists EVERY part-* file of the pages table and would re-route all
-        # batch-processed rows under stream-* markers.
-        if not args.maintenance_only:
-            sink_markers = (pipe.routed_table.committed_markers()
-                            if pipe.routed_table.exists() else set())
-            logfile_owned = sorted(
-                m for m in sink_markers if m.startswith("logfiles-"))
-            if logfile_owned:
-                ap.error(
-                    f"{args.out}/routed is managed by --log-file (markers "
-                    f"{logfile_owned[:3]}"
-                    f"{'...' if len(logfile_owned) > 3 else ''}): appending "
-                    "snapshot-pipeline rows would mix the two corpora in "
-                    "one sink. Point --out at a separate directory."
-                )
-            if args.stream:
-                batch_owned = sorted(
-                    m for m in sink_markers if m.startswith("pages-snap-"))
-                if batch_owned:
-                    ap.error(
-                        f"{args.out}/routed already holds batch-committed "
-                        f"rows (markers {batch_owned[:3]}"
-                        f"{'...' if len(batch_owned) > 3 else ''}): a stream "
-                        "checkpoint keeps its own cursor and idempotence "
-                        "markers (stream-*), so streaming this layout would "
-                        "re-route every batch-processed row as a duplicate. "
-                        "Continue in batch mode, use --maintenance-only for "
-                        "maintenance, or start the stream on a fresh layout."
-                    )
-        if args.maintenance_only:
-            results = []
-        elif args.stream:
-            from .streaming.stream import run_streaming, start_live_stream
-
-            ckpt_dir = Path(args.checkpoint).with_suffix(".stream_ckpt")
-            if args.trigger_interval:
-                # live ticker: run until SIGINT/SIGTERM, then drain the
-                # in-flight batch before the final summary (the reference's
-                # signal.NotifyContext + drain loop, main.go:23 +
-                # aggregate.go:28-41). A handler + 1 s awaitTermination poll
-                # keeps the signal out of the blocking py4j call.
-                import signal
-
-                stop_flag = {"stop": False}
-
-                def _on_signal(_sig, _frame):
-                    stop_flag["stop"] = True
-
-                signal.signal(signal.SIGINT, _on_signal)
-                signal.signal(signal.SIGTERM, _on_signal)
-                q, processed = start_live_stream(
-                    spark, pages_table, pipe, ckpt_dir,
-                    processing_time=args.trigger_interval,
-                )
-                while q.isActive and not stop_flag["stop"]:
-                    q.awaitTermination(1)
-                if not stop_flag["stop"]:
-                    # the query terminated on its own: a failure landing
-                    # between awaitTermination's timeout return and the
-                    # isActive check exits the loop without raising —
-                    # surface it instead of printing a healthy summary
-                    exc = q.exception()
-                    if exc is not None:
-                        raise exc
-                if stop_flag["stop"]:
-                    print("Gracefully shutting down...", file=sys.stderr)
-                    # a second Ctrl-C/TERM now force-interrupts: the drain
-                    # below must never leave the process unkillable
-                    signal.signal(signal.SIGINT, signal.SIG_DFL)
-                    signal.signal(signal.SIGTERM, signal.SIG_DFL)
-                    # stop() alone would CANCEL the in-flight micro-batch
-                    # (its rows would miss the final summary, though the
-                    # idempotence markers keep the resume safe); the drain
-                    # helper stops at the micro-batch boundary instead and
-                    # re-raises a stream failure as a failure.
-                    _drain_live_query(q)
-            else:
-                processed = run_streaming(spark, pages_table, pipe, ckpt_dir)
-            # per-run counts from each batch's own observe() metrics — same
-            # contract as batch mode (a second idle --stream run reports 0,
-            # not the routed table's all-time totals)
-            results = processed
+        if args.log_file:
+            pipe, results, summary = _ingest_log_files(spark, args)
+            line = {"files": len(args.log_file)}
         else:
-            # mixed-mode guard: batch and stream keep INDEPENDENT cursors
-            # and use different sink idempotence markers (pages-snap-<id>
-            # vs stream-<n>), so a batch run whose cursor is BEHIND what a
-            # stream checkpoint already drained would re-route those
-            # snapshots as duplicates. Covers both the fresh-cursor case
-            # (no batch checkpoint at all) and a stale existing checkpoint
-            # left over from before the stream took over: the drained set
-            # is recovered from each registered checkpoint's file-source
-            # metadata log, not inferred from the checkpoint's existence.
-            markers = pages_table.stream_markers()
-            if markers:
-                behind_cursor = 0
-                if Path(args.checkpoint).exists() and not args.from_start:
-                    behind_cursor = (
-                        Checkpoint(args.checkpoint).load().last_snapshot_id
-                    )
-                drained: set[int] = set()
-                unknown: list[str] = []
-                for m in markers:
-                    d = pages_table.stream_drained_snapshots(m)
-                    if d is None:
-                        unknown.append(m)
-                    else:
-                        drained |= d
-                overlap = sorted(s for s in drained if s > behind_cursor)
-                if unknown:
-                    # fail CLOSED: a registered stream whose checkpoint
-                    # metadata is gone may have drained anything — assuming
-                    # "nothing" would re-route every streamed row
-                    ap.error(
-                        f"{args.pages_table} is managed by stream "
-                        f"checkpoint(s) {unknown} whose drain state cannot "
-                        "be read (checkpoint dir deleted or moved?): a "
-                        "batch run could duplicate every streamed row in "
-                        "the routed sink. Restore the checkpoint, or "
-                        "--retire-stream if the stream is permanently "
-                        "done (then audit the sink for stream-* markers)."
-                    )
-                if overlap:
-                    ap.error(
-                        f"{args.pages_table} is managed by stream "
-                        f"checkpoint(s) {markers} which already drained "
-                        f"snapshot(s) {overlap} ahead of the batch cursor "
-                        f"({behind_cursor} at {args.checkpoint}): a batch "
-                        "run would duplicate those rows in the routed "
-                        "sink. Use --stream to resume the stream, or "
-                        "--maintenance-only for maintenance, or "
-                        "--retire-stream first if the stream is "
-                        "permanently done."
-                    )
-            cp = Checkpoint(args.checkpoint)
-            results = run_incremental(spark, pages_table, pipe, cp,
-                                      from_start=args.from_start)
-        totals = {"parsed": 0, "unparsed": 0, "bot": 0, "error": 0}
-        rows_in = 0
-        for r in results:
-            rows_in += r.rows_in
-            for k, v in r.sink_counts.items():
-                totals[k] += v
-        n_batches = len(results)
-        if args.compact:
-            # no marker: compaction is safe to redo — a directory is only
-            # rewritten when it holds >= 2 files below the target size, so
-            # a compacted table is a true no-op (no growth); a constant
-            # marker would silently turn every later run into a no-op
-            _compact_reporting(pipe.routed_table, "routed sink",
-                               args.compact_rows_per_file,
-                               sort_by=args.compact_sort_by,
-                               zorder_by=args.compact_zorder_by,
-                               spark=spark)
-        if args.retire_stream:
-            # works in maintenance-only runs too (no --stream): the marker
-            # belongs to the PAGES table and the checkpoint path is derived
-            # the same way the streaming mode derives it
-            ckpt = Path(args.checkpoint).with_suffix(".stream_ckpt")
-            removed = pages_table.unregister_stream(ckpt)
-            print(f"retired stream checkpoint {ckpt}" if removed
-                  else f"no stream marker for {ckpt}", file=sys.stderr)
-        if args.expire_snapshots:
-            # a registered stream checkpoint makes expiry refuse (it would
-            # delete part-* files the checkpoint may still need); that is a
-            # clean maintenance outcome, not a crash — report and move on.
-            # (--expire-snapshots targets the ROUTED sink; the pages table
-            # the CLI's own stream reads is --expire-pages-snapshots.)
-            try:
-                gone = pipe.routed_table.expire_snapshots()
-                print(f"expired {len(gone)} data file(s)", file=sys.stderr)
-            except RuntimeError as e:
-                print(f"expire-snapshots refused: {e}", file=sys.stderr)
-        if args.compact_pages:
-            _compact_reporting(pages_table, "pages table",
-                               args.compact_rows_per_file,
-                               sort_by=args.compact_sort_by,
-                               zorder_by=args.compact_zorder_by,
-                               spark=spark)
-        if args.expire_pages_snapshots:
-            try:
-                gone = pages_table.expire_snapshots()
-                print(f"expired {len(gone)} pages data file(s)",
-                      file=sys.stderr)
-            except RuntimeError as e:
-                print(f"expire-pages-snapshots refused: {e}", file=sys.stderr)
-        if args.analyze_pages:
-            n_analyzed = pages_table.analyze(spark)
-            print(f"analyzed {n_analyzed} pages data file(s)",
-                  file=sys.stderr)
-        # every run: folds this run's batches, heals a previous run that
-        # crashed after its routed commit, and is idle (no Spark job) when
-        # the tables already cover the sink — maintenance moves no cursor
-        agg_rows = pipe.write_aggregates()
-        if not args.no_analyze_routed and pipe.routed_table.exists():
-            _analyze_routed(pipe.routed_table, spark)
-        print(json.dumps({"batches": n_batches, "rows_in": rows_in,
-                          "sink_counts": totals,
-                          "malformed": totals["unparsed"] + totals["error"],
-                          "aggregate_tables": agg_rows}))
-        # the reference's final summary table (print.go:26-49), rendered
-        # from the just-folded (or already current) agg_by_host
-        # table — a tiny scan — instead of re-aggregating the whole
-        # all-time routed sink a second time
-        from .plans.pipeline import summary_text_from_agg
-
-        agg_t = SnapshotTable(Path(args.out) / "agg_by_host")
-        print(summary_text_from_agg(
-            agg_t.read(spark) if agg_t.exists() else None))
-        return 0
+            pages_table, pipe = _open_tables(spark, args)
+            results = _ingest(spark, args, pages_table, pipe)
+            _maintain(spark, args, pages_table, pipe)
+            line, summary = {"batches": len(results)}, None
+        return _report(spark, line, results, pipe, summary)
     finally:
         spark.stop()
 

@@ -31,7 +31,6 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Optional
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -160,13 +159,11 @@ class Pipeline:
 
     def __init__(self, spark: SparkSession, out_root: str | Path,
                  lookup: DataFrame, use_arrow_udf: bool = True,
-                 salt_buckets: Optional[int] = None,
                  write_partitions: Optional[int] = None):
         self.spark = spark
         self.out_root = Path(out_root)
         self.lookup = lookup
         self.use_arrow_udf = use_arrow_udf
-        self.salt_buckets = salt_buckets
         #: explicit pre-write repartition on url (north_rule: "handles
         #: warc_ts/url skew via explicit repartitioning"): url hashes spread
         #: uniformly regardless of host/warc_ts skew, so write tasks balance
@@ -260,7 +257,7 @@ class Pipeline:
     # -- aggregate views --------------------------------------------------------
     def agg_by_host(self) -> Optional[DataFrame]:
         v = self.valid_records()
-        return None if v is None else aggregate_by_host(v, self.salt_buckets)
+        return None if v is None else aggregate_by_host(v)
 
     def agg_by_status_bucket(self) -> Optional[DataFrame]:
         v = self.valid_records()
@@ -357,7 +354,3 @@ def summary_text_from_agg(agg: Optional[DataFrame], now=None) -> str:
                 duration_total=float(r["sum_duration_s"]),
             )
     return format_summaries(ss, now=now)
-
-
-def lookup_df(spark: SparkSession, lookup_pdf: pd.DataFrame) -> DataFrame:
-    return spark.createDataFrame(lookup_pdf)

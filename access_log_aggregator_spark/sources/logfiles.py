@@ -31,9 +31,12 @@ Semantics matched to the reference tailer:
 - every delivered line is a record attempt — empty lines reach the parser
   and count as malformed, exactly like ``json.Unmarshal("")`` failing in
   ``model.go:18`` (``spark.read.text`` yields ``""`` for them);
-- invalid UTF-8 becomes U+FFFD on both sides (Java's UTF-8 decode and
-  Go's encoding/json both substitute the replacement rune inside string
-  values), so the malformed/valid split agrees byte-for-byte;
+- invalid UTF-8 becomes U+FFFD: the text source keeps a line's raw
+  bytes, so the scan applies ``make_valid_utf8`` to each line before
+  anything else reads it (Go's encoding/json substitutes the same
+  replacement rune inside string values, and the oracle decodes with
+  ``errors="replace"``), so the malformed/valid split agrees
+  byte-for-byte and the Arrow parse path never meets invalid bytes;
 - an UNTERMINATED final line is held back, not processed:
   ``tailer.go:13-25`` returns EOF without delivering a partial line (the
   newline is the record delimiter — the line may still be mid-write), so
@@ -88,8 +91,8 @@ def canonical_paths(paths: Iterable[str | Path]) -> list[Path]:
 
 def _unterminated_tail(path: Path) -> str | None:
     """The file's COMPLETE trailing bytes after the last newline, decoded
-    as the text source will decode them — or None when the file is empty
-    or newline-terminated (nothing held). A trailing ``\\r`` does NOT
+    as the scan sees them (invalid UTF-8 -> U+FFFD) — or None when the
+    file is empty or newline-terminated (nothing held). A trailing ``\\r`` does NOT
     terminate: the reference's delimiter is ``\\n`` alone.
 
     Scans backward in ``_TAIL_PROBE`` chunks until a newline (or BOF), so
@@ -122,7 +125,7 @@ def _unterminated_tail(path: Path) -> str | None:
                 break
             end = start
     tail = buf.rsplit(b"\n", 1)[-1]
-    # same decode the JVM text source applies: invalid UTF-8 -> U+FFFD
+    # the replacement the scan applies with make_valid_utf8
     return tail.decode("utf-8", errors="replace")
 
 
@@ -131,16 +134,17 @@ def read_log_files(spark: SparkSession, paths: Iterable[str | Path],
     """Raw newline-JSON access-log files -> a pages-shaped DataFrame.
 
     Output schema matches the pages table (url, warc_ts, html, text,
-    lang): ``text`` is the raw line, ``url`` is ``log://<file>`` lineage,
-    ``html`` re-encodes the line (UTF-8 valid by construction after the
-    text source's decode), ``warc_ts`` is the epoch placeholder (the
+    lang): ``text`` is the line with invalid UTF-8 replaced by U+FFFD
+    (the same replacement :func:`_unterminated_tail` applies, so the held
+    tail still matches), ``url`` is ``log://<file>`` lineage, ``html``
+    re-encodes the line, ``warc_ts`` is the epoch placeholder (the
     reference carries no per-file event time; the record's OWN ``time``
     field is what validation/aggregation read downstream), ``lang`` null.
     """
     paths = canonical_paths(paths)
     df = (spark.read.option("lineSep", "\n")  # \n ONLY — tailer parity
           .text([str(p) for p in paths])
-          .select(F.col("value").alias("text"),
+          .select(F.make_valid_utf8("value").alias("text"),
                   F.input_file_name().alias("_src")))
 
     if hold_unterminated:

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from ..plans.checkpoint import check_sink_owner, mint_marker
 from ..plans.pipeline import BatchResult, Pipeline
 from ..sources.tableio import STREAM_GLOB, SnapshotTable
 
@@ -85,48 +86,29 @@ def _page_stream(spark: SparkSession, pages_table: SnapshotTable,
     )
 
 
-def _has_committed_offsets(checkpoint_dir: str | Path) -> bool:
-    """True iff the checkpoint holds at least one COMMITTED offset file —
-    the definition of "resumable": Spark's HDFSMetadataLog names batch
-    files ``0``, ``1``, ...; ``.``-prefixed entries are CRC sidecars and
-    in-flight ``.<id>.<uuid>.tmp`` writes. A bare ``offsets/`` dir (crash
-    before offset 0 was written) or one holding only sidecar/tmp litter
-    (crash mid-write of offset 0) still restarts at batch id 0, exactly
-    the collision a fresh checkpoint has."""
-    offsets = Path(checkpoint_dir) / "offsets"
-    if not offsets.is_dir():
-        return False
-    return any(not e.name.startswith(".") and not e.name.endswith(".tmp")
-               for e in offsets.iterdir())
+def _start_fanout(spark: SparkSession, pages_table: SnapshotTable,
+                  pipeline: Pipeline, checkpoint_dir: str | Path,
+                  max_files_per_trigger: int, **trigger):
+    """Start the foreachBatch fan-out of the pages stream into the batch
+    pipeline, each micro-batch committed under its stream-<id> marker,
+    after the sink-ownership check. Returns ``(query, processed)``, with
+    ``processed`` the live list of this query's BatchResults."""
+    check_sink_owner("stream", pipeline.out_root,
+                     stream_checkpoint=checkpoint_dir)
+    processed: list[BatchResult] = []
 
+    def handle(batch_df, batch_id: int) -> None:
+        processed.append(pipeline.process_batch(
+            batch_df, batch_id=mint_marker("stream", batch_id)))
 
-def _guard_fresh_checkpoint_against_foreign_markers(
-        pipeline: Pipeline, checkpoint_dir: str | Path) -> None:
-    """A FRESH stream checkpoint restarts Spark's batch ids at 0, and the
-    routed sink's idempotence markers are ``stream-{batch_id}`` — so a
-    fresh checkpoint pointed at a sink another stream checkpoint already
-    committed to would find its early batch ids ALREADY MARKED and drop
-    those micro-batches as duplicate no-ops: silent row loss, the inverse
-    of the double-routing the other mode-ownership guards catch. Refuse
-    up front; resuming an existing checkpoint (offsets present) keeps its
-    own ids and is unaffected."""
-    if _has_committed_offsets(checkpoint_dir):
-        return  # resume: batch ids continue where this checkpoint left off
-    t = pipeline.routed_table
-    if not t.exists():
-        return
-    owned = sorted(m for m in t.committed_markers()
-                   if m.startswith("stream-"))
-    if owned:
-        raise RuntimeError(
-            f"{t.root} already holds rows committed by another stream "
-            f"checkpoint (markers {owned[:3]}"
-            f"{'...' if len(owned) > 3 else ''}): a fresh checkpoint "
-            "restarts micro-batch ids at 0, so its batches would collide "
-            "with those markers and be dropped as duplicates. Resume the "
-            "original checkpoint, or point the output at a fresh "
-            "directory."
-        )
+    q = (
+        _page_stream(spark, pages_table, checkpoint_dir, max_files_per_trigger)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", str(checkpoint_dir))
+        .trigger(**trigger)
+        .start()
+    )
+    return q, processed
 
 
 def run_streaming(
@@ -145,21 +127,12 @@ def run_streaming(
     table's all-time totals). For the live ticker use
     :func:`start_live_stream`, which hands back the StreamingQuery the
     caller needs to stop/await — a fire-and-forget live start with no
-    handle would be unmanageable.
+    handle would be unmanageable. Raises
+    :class:`~..plans.checkpoint.SinkOwnershipError` on a sink another
+    mode (or another stream checkpoint) owns.
     """
-    _guard_fresh_checkpoint_against_foreign_markers(pipeline, checkpoint_dir)
-    processed: list[BatchResult] = []
-
-    def handle(batch_df, batch_id: int) -> None:
-        processed.append(pipeline.process_batch(batch_df, batch_id=f"stream-{batch_id}"))
-
-    stream = _page_stream(spark, pages_table, checkpoint_dir, max_files_per_trigger)
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q, processed = _start_fanout(spark, pages_table, pipeline, checkpoint_dir,
+                                 max_files_per_trigger, availableNow=True)
     q.awaitTermination()
     return processed
 
@@ -309,9 +282,9 @@ def _require_fresh_memory_sink_checkpoint(
     per checkpoint dir. Fail up front with guidance instead of letting
     startQuery throw after the stream marker is already registered.
 
-    Deliberately NOT :func:`_has_committed_offsets`: Spark's
-    ``recoverFromCheckpointLocation`` refusal is existence-based — it
-    throws on a bare ``offsets/`` dir with zero committed offsets
+    Deliberately NOT :func:`~..plans.checkpoint.has_committed_offsets`:
+    Spark's ``recoverFromCheckpointLocation`` refusal is existence-based
+    — it throws on a bare ``offsets/`` dir with zero committed offsets
     (verified against the installed Spark) — so this precheck mirrors
     that exact definition. Using the committed-offsets test here would
     wave through a litter-only checkpoint and let startQuery throw the
@@ -340,19 +313,8 @@ def start_live_stream(
     list of per-batch :class:`~..plans.pipeline.BatchResult`, appended as
     batches commit. ``query.stop()`` waits for the in-flight batch to
     finish — the graceful-shutdown drain (aggregate.go:28-41): everything
-    enqueued is counted before exit.
+    enqueued is counted before exit. Refuses a sink another mode owns,
+    like :func:`run_streaming`.
     """
-    _guard_fresh_checkpoint_against_foreign_markers(pipeline, checkpoint_dir)
-    processed: list[BatchResult] = []
-
-    def handle(batch_df, batch_id: int) -> None:
-        processed.append(pipeline.process_batch(batch_df, batch_id=f"stream-{batch_id}"))
-
-    q = (
-        _page_stream(spark, pages_table, checkpoint_dir, 16)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(processingTime=processing_time)
-        .start()
-    )
-    return q, processed
+    return _start_fanout(spark, pages_table, pipeline, checkpoint_dir, 16,
+                         processingTime=processing_time)

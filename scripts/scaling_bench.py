@@ -88,6 +88,60 @@ spark.stop()
 """
 
 
+#: equal-work trials a level needs before its clean median is reported
+MIN_CLEAN_TRIALS = 3
+
+
+def level_stats(cores: int, trials: list[float], job_cpus: list[float],
+                n_pages: int) -> dict:
+    """One level's summary over its timed trials.
+
+    The CLEAN median is the median over equal-work trials only (job-tree
+    CPU <= 1.15x the level's minimum) — the same attribution filter
+    bench.py applies to pipeline spread. Principled because the known
+    co-tenant mode (category (d) in BENCH/BASELINE.md) multiplies the
+    job's OWN cycles-per-page at zero steal, and it hits the 4N level ~4x
+    harder (4x the bandwidth demand): a raw median therefore blends
+    host-contaminated trials asymmetrically between levels. Every
+    excluded trial stays in the JSON with its CPU evidence. With fewer
+    than :data:`MIN_CLEAN_TRIALS` clean trials the clean median is
+    ``None`` and ``clean_median_reason`` says why: one or two trials are
+    no median."""
+    if job_cpus and len(job_cpus) == len(trials):
+        floor_cpu = min(job_cpus)
+        clean = [w for w, c in zip(trials, job_cpus) if c <= 1.15 * floor_cpu]
+    else:  # old-format session output: no CPU evidence
+        clean = list(trials)
+    enough = len(clean) >= MIN_CLEAN_TRIALS
+    clean_median = round(statistics.median(clean), 3) if enough else None
+    return {
+        "cores": cores,
+        "trials": trials,
+        "best_sec": min(trials),
+        "median_sec": round(statistics.median(trials), 3),
+        "clean_median_sec": clean_median,
+        "clean_median_reason": None if enough else (
+            f"{len(clean)} clean trial(s), fewer than {MIN_CLEAN_TRIALS}"),
+        "n_clean": len(clean),
+        "pages_per_sec_best": round(n_pages / min(trials), 1),
+        "pages_per_sec_median":
+            round(n_pages / statistics.median(trials), 1),
+        "pages_per_sec_clean_median":
+            round(n_pages / clean_median, 1) if enough else None,
+    }
+
+
+def clean_median_efficiency(lo: dict, hi: dict):
+    """``(efficiency, None)`` from the two levels' clean medians, or
+    ``(None, reason)`` when either level has too few clean trials."""
+    reasons = [f"{s['cores']} cores: {s['clean_median_reason']}"
+               for s in (lo, hi) if s["clean_median_reason"]]
+    if reasons:
+        return None, "; ".join(reasons)
+    return round((hi["pages_per_sec_clean_median"]
+                  / lo["pages_per_sec_clean_median"]) / 4.0, 3), None
+
+
 def run_session(cores: int, pages_path: str) -> dict:
     script = WORKER.format(repo=str(REPO))
     out = subprocess.run(
@@ -120,41 +174,11 @@ def main() -> int:
             steals[cores].extend(res.get("steal_pct", []))
             job_cpus[cores].extend(res.get("job_cpu_sec", []))
 
-    def stats(cores):
-        t = levels[cores]
-        # CLEAN median: median over equal-work trials only (job-tree CPU
-        # <= 1.15x the level's minimum) — the same attribution filter
-        # bench.py applies to pipeline spread. Principled because the
-        # known co-tenant mode (category (d) in BENCH/BASELINE.md)
-        # multiplies the job's OWN cycles-per-page at zero steal, and it
-        # hits the 4N level ~4x harder (4x the bandwidth demand): a raw
-        # median therefore blends host-contaminated trials
-        # asymmetrically between levels. Every excluded trial stays in
-        # the JSON with its CPU evidence.
-        cpus = job_cpus[cores]
-        if cpus and len(cpus) == len(t):
-            floor_cpu = min(cpus)
-            clean = [w for w, c in zip(t, cpus) if c <= 1.15 * floor_cpu]
-        else:  # old-format session output: no CPU evidence
-            clean = t
-        return {
-            "cores": cores,
-            "trials": t,
-            "best_sec": min(t),
-            "median_sec": round(statistics.median(t), 3),
-            "clean_median_sec": round(statistics.median(clean), 3),
-            "n_clean": len(clean),
-            "pages_per_sec_best": round(n_pages / min(t), 1),
-            "pages_per_sec_median": round(n_pages / statistics.median(t), 1),
-            "pages_per_sec_clean_median":
-                round(n_pages / statistics.median(clean), 1),
-        }
-
-    lo, hi = stats(n_level), stats(4 * n_level)
+    lo, hi = (level_stats(c, levels[c], job_cpus[c], n_pages)
+              for c in (n_level, 4 * n_level))
     eff_best = (hi["pages_per_sec_best"] / lo["pages_per_sec_best"]) / 4.0
     eff_median = (hi["pages_per_sec_median"] / lo["pages_per_sec_median"]) / 4.0
-    eff_clean_median = (hi["pages_per_sec_clean_median"]
-                        / lo["pages_per_sec_clean_median"]) / 4.0
+    eff_clean_median, clean_reason = clean_median_efficiency(lo, hi)
 
     if os.environ.get("SPARK_GRAFT_SCALE_SUPPLEMENT"):
         # supplementary pair (e.g. a larger corpus): report JSON only,
@@ -167,7 +191,8 @@ def main() -> int:
             "T_4N_pages_per_sec": hi["pages_per_sec_best"],
             "scaling_efficiency": round(eff_best, 3),
             "scaling_efficiency_median": round(eff_median, 3),
-            "scaling_efficiency_clean_median": round(eff_clean_median, 3),
+            "scaling_efficiency_clean_median": eff_clean_median,
+            "scaling_efficiency_clean_median_reason": clean_reason,
             "trials": {str(k): v for k, v in levels.items()},
             "steal_pct": {str(k): v for k, v in steals.items()},
             "job_cpu_sec": {str(k): v for k, v in job_cpus.items()},
@@ -202,7 +227,8 @@ def main() -> int:
         "speedup_best": round(hi["pages_per_sec_best"] / lo["pages_per_sec_best"], 3),
         "scaling_efficiency": round(eff_best, 3),
         "scaling_efficiency_median": round(eff_median, 3),
-        "scaling_efficiency_clean_median": round(eff_clean_median, 3),
+        "scaling_efficiency_clean_median": eff_clean_median,
+        "scaling_efficiency_clean_median_reason": clean_reason,
         "n_clean": {str(lo["cores"]): lo["n_clean"],
                     str(hi["cores"]): hi["n_clean"]},
         "trials": {str(k): v for k, v in levels.items()},
@@ -225,7 +251,7 @@ per-trial job-tree CPU + steal recorded).
 
 **Scaling efficiency = (T_4N / T_N) / 4 = {result['scaling_efficiency']}**
 (raw-median-based: {result['scaling_efficiency_median']};
-clean-median-based: {result['scaling_efficiency_clean_median']} —
+clean-median-based: {result['scaling_efficiency_clean_median']}{f" ({clean_reason})" if clean_reason else ""} —
 median over equal-work trials only, job CPU <= 1.15x the level minimum,
 the same attribution filter the pipeline spread uses; gate >= 0.8:
 {"PASS" if result['pass'] else "FAIL"})

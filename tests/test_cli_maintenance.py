@@ -409,8 +409,7 @@ def test_routed_sink_carries_stats_and_blooms_by_default(tmp_path):
     """Every live routed-sink file carries manifest stats + host equality
     blooms, so a downstream point lookup prunes with NO manual analyze —
     the write tasks return both with their file records, and the commit
-    stays zero-footer-read. --no-analyze-routed only skips healing files
-    committed statless by earlier releases, so it changes nothing here."""
+    stays zero-footer-read."""
     import sys as _sys
     from pathlib import Path as _P
 
@@ -439,17 +438,6 @@ def test_routed_sink_carries_stats_and_blooms_by_default(tmp_path):
     ).fetchone()[0]
     planned = t.data_files(where=[("host", "=", some_host)])
     assert 0 < len(planned) <= len(live)
-
-    # --no-analyze-routed: the files still carry stats and host blooms
-    data2 = str(tmp_path / "data2")
-    _run_cli("--generate", "600", "--data-dir", data2, "--from-start",
-             "--no-analyze-routed")
-    t2 = SnapshotTable(_P(data2) / "out" / "routed")
-    live2, stats2 = t2.data_files(), t2._file_stats()
-    assert live2 and all(f in stats2 for f in live2)
-    for f in live2:
-        assert "host" in stats2[f].get("bloomed", []), stats2[f]
-    assert t2.data_files(where=[("host", "=", "host00.example.net")]) == []
 
 
 def test_failed_routed_sweep_leaves_properties_unchanged(tmp_path,

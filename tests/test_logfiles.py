@@ -266,3 +266,90 @@ def test_cli_log_file_refuses_pipeline_managed_out(tmp_path):
     with pytest.raises(SystemExit) as ei:
         main(["--log-file", str(log), "--out", str(out)])
     assert ei.value.code == 2  # argparse error exit
+
+
+#: host bytes that are not valid UTF-8: lone bytes, truncated 2/3/4-byte
+#: sequences, an overlong, a surrogate and an out-of-range code point
+_INVALID_HOSTS = [b"\xff\xfe.com", b"a\x80.com", b"b\xc3.com",
+                  b"c\xe2\x82.com", b"d\xf0\x9f\x98.com", b"e\xc0\xaf.com",
+                  b"f\xed\xa0\x80.com", b"g\xf4\x90\x80\x80.com"]
+
+
+def test_invalid_utf8_tail_is_held_then_routed(tmp_path, spark, lookup_sdf):
+    """An unterminated final line holding invalid bytes is held back like
+    any other (the driver-side tail decode and the scan replace invalid
+    bytes the same way); once its newline lands it routes as parsed with
+    the host the oracle decodes (U+FFFD per invalid sequence)."""
+    from access_log_aggregator_spark.oracle.parser import go_parse_record
+
+    for host in _INVALID_HOSTS:
+        p = tmp_path / "a.log"
+        tail = _line(1, host)
+        p.write_bytes(_line(0) + b"\n" + tail)
+        assert _routed_counts(spark, lookup_sdf, [p]) == {"parsed": 1}, host
+
+        p.write_bytes(p.read_bytes() + b"\n")
+        routed = build_routed(read_log_files(spark, [p]), lookup_sdf)
+        rows = routed.select("match_class", "host").collect()
+        assert sorted((r["match_class"], r["host"]) for r in rows) == sorted(
+            [("parsed", "a.com"),
+             ("parsed", go_parse_record(tail).host)]), host
+
+
+def test_cli_log_file_routes_invalid_utf8_like_the_oracle(tmp_path):
+    """A log line with invalid UTF-8 used to crash the Arrow parse path
+    (``ArrowException: Wrapping ... failed``). Summary-only and --out runs
+    now report the oracle's counts, and the --out run's agg_by_host table
+    holds the oracle's per-host totals; both print the oracle's table."""
+    import subprocess
+    import sys as _sys
+
+    import pyarrow.parquet as pq
+
+    from access_log_aggregator_spark.oracle.summaries import (
+        Summaries,
+        format_summaries,
+    )
+    from access_log_aggregator_spark.sources.tableio import SnapshotTable
+
+    repo = Path(__file__).resolve().parent.parent
+    lines = [_line(i, b"h%d.com" % (i % 2), 200 + 300 * (i % 2))
+             for i in range(4)]
+    lines += [_line(10 + i, h) for i, h in enumerate(_INVALID_HOSTS)]
+    lines += [b"not json \xff", b"", _line(30, b"crawler.example.ai")]
+    log = tmp_path / "a.log"
+    log.write_bytes(b"\n".join(lines) + b"\n")
+
+    oracle = Summaries()
+    for ln in lines:
+        oracle.aggregate_raw(ln)
+
+    def table(text):
+        return [ln for ln in text.splitlines() if "Summary as of" not in ln]
+
+    def run(*extra):
+        r = subprocess.run(
+            [_sys.executable, "-m", "access_log_aggregator_spark.cli",
+             "--log-file", str(log), *extra, "--master", "local[2]"],
+            capture_output=True, text=True, timeout=420, cwd=str(repo),
+        )
+        assert r.returncode == 0, r.stderr[-3000:]
+        first, rest = r.stdout.split("\n", 1)
+        counts = json.loads(first)
+        assert counts["rows_in"] == len(lines)
+        assert counts["malformed"] == oracle.malformed
+        c = counts["sink_counts"]
+        assert c["parsed"] + c["bot"] == len(lines) - oracle.malformed
+        assert table(rest) == table(format_summaries(oracle) + "\n")
+        return counts
+
+    alone = run()
+    out = tmp_path / "out"
+    sunk = run("--out", str(out))
+    assert alone["sink_counts"] == sunk["sink_counts"]
+    agg = SnapshotTable(out / "agg_by_host")
+    got = {r["host"]: (r["total_requests"], r["requests_2xx"],
+                       float(r["sum_duration_s"]))
+           for r in pq.read_table(agg.data_files()).to_pylist()}
+    assert got == {h: (s.request_total, s.request_2xx, s.duration_total)
+                   for h, s in oracle.by_host.items()}
