@@ -162,8 +162,6 @@ def _parser() -> argparse.ArgumentParser:
     ap.add_argument("--write-partitions", type=int, default=None, metavar="N",
                     help="explicit repartition(N, url) before the sink write "
                          "(balances write tasks / bounds file count under skew)")
-    ap.add_argument("--no-arrow-udf", action="store_true",
-                    help="use the pure-JVM regexp extractor instead of the pandas UDF")
     ap.add_argument("--compact", action="store_true",
                     help="after processing, compact the routed sink's small "
                          "files into one replace snapshot (maintenance job; "
@@ -331,7 +329,6 @@ def _pipeline(spark, args):
     from .plans.pipeline import Pipeline
 
     return Pipeline(spark, args.out, _lookup(spark, args),
-                    use_arrow_udf=not args.no_arrow_udf,
                     write_partitions=args.write_partitions)
 
 
@@ -509,9 +506,7 @@ def _ingest_log_files(spark, args):
     # once (with --out they come from the write tasks' file records; a
     # test pins that both report the same counts)
     routed, obs = observe_routed_classes(
-        build_routed(pages, _lookup(spark, args),
-                     use_arrow_udf=not args.no_arrow_udf),
-        "logfile_counts")
+        build_routed(pages, _lookup(spark, args)), "logfile_counts")
     valid = routed.filter(
         F.col("match_class").isin(X.CLASS_PARSED, X.CLASS_BOT))
     summary = summary_text_from_agg(

@@ -65,10 +65,12 @@ def _polyhash(codes: np.ndarray, powers: np.ndarray) -> int:
     return acc
 
 
-@F.pandas_udf(StructType([
+_FP_TOK_SCHEMA = StructType([
     StructField("fingerprint", LongType()),
     StructField("n_tokens", IntegerType()),
-]))
+])
+
+
 def _fp_tok_udf(texts: pd.Series) -> pd.DataFrame:
     powers = _POWERS
     fps: list[int | None] = []
@@ -93,4 +95,6 @@ def _fp_tok_udf(texts: pd.Series) -> pd.DataFrame:
 def fingerprint_tokens(text_col: str) -> Column:
     """struct(fingerprint, n_tokens) — bit-identical to the canonical
     xsql.polyhash / size(xsql.tokens) expressions."""
-    return _fp_tok_udf(F.col(text_col))
+    # built per call, bound to the live SparkContext (see
+    # parse_udf.extract_parse)
+    return F.pandas_udf(_fp_tok_udf, _FP_TOK_SCHEMA)(F.col(text_col))

@@ -54,7 +54,6 @@ def _signature(t: str | None) -> list[int] | None:
     return ((_A * h + _B) % x.P).min(axis=1).tolist()
 
 
-@F.pandas_udf(ArrayType(LongType()))
 def _minhash_sig_udf(texts: pd.Series) -> pd.Series:
     return pd.Series([_signature(t) for t in texts], dtype=object)
 
@@ -62,4 +61,6 @@ def _minhash_sig_udf(texts: pd.Series) -> pd.Series:
 def minhash_signature(text_col: str) -> Column:
     """Column of K-element minhash signature arrays (NULL when the text has
     no 5-char shingle), bit-identical to the canonical SQL formulation."""
-    return _minhash_sig_udf(F.col(text_col))
+    # built per call, bound to the live SparkContext (see
+    # parse_udf.extract_parse)
+    return F.pandas_udf(_minhash_sig_udf, ArrayType(LongType()))(F.col(text_col))

@@ -1,25 +1,19 @@
-"""Vectorized payload extraction — the ONLY Python on the hot path.
+"""Vectorized payload extraction + wide-grammar fallback — the ONLY Python
+on the hot path.
 
-An Arrow-batched pandas UDF (iterator form, so the compiled regex is bound
-once per executor worker rather than once per batch — SURVEY.md §4.2 item 5)
-that applies the canonical LINE_RE to the ``text`` column and returns the
-extracted access-log line. Everything downstream (field parse, validation,
-routing, aggregation) is pure Catalyst.
-
-A pure-JVM twin (:func:`extract_payload_expr`) implements the identical
-contract with ``regexp_extract``; the pipeline can run either (the pandas UDF
-is the north-star-mandated component; the JVM expression is the zero-Python
-alternative) and a test asserts they agree row-for-row.
+An Arrow-batched iterator pandas UDF that applies the canonical
+LINE_PATTERN to the ``text`` column with pyarrow's RE2 kernels, and decodes
+the rare lines the fast-path field regex does not cover with exact Go
+``json.Unmarshal`` semantics. Everything downstream (fast-path field parse,
+validation, routing, aggregation) is pure Catalyst.
 """
 
 from __future__ import annotations
 
-import re
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     BooleanType,
@@ -31,9 +25,6 @@ from pyspark.sql.types import (
 )
 
 from . import extract as X
-
-# pandas .str.extract needs a capture group; wrap the canonical pattern.
-_EXTRACT_RE = re.compile("(" + X.LINE_PATTERN + ")", re.MULTILINE)
 
 #: RE2 form for pyarrow.compute.extract_regex: named group + inline (?m).
 #: On the pattern subset used (ASCII literals, '.', anchors) RE2 and Python
@@ -54,34 +45,6 @@ def _extract_arrow(s: pd.Series) -> pd.Series:
     arr = pa.Array.from_pandas(s, type=pa.string())
     line = pc.struct_field(pc.extract_regex(arr, _EXTRACT_RE2), "line")
     return line.to_pandas()
-
-
-def _extract_pandas(s: pd.Series) -> pd.Series:
-    """Fallback path: pandas .str.extract (Python re, first match)."""
-    out = s.str.extract(_EXTRACT_RE, expand=True)[0]
-    return out.where(out.notna(), None)
-
-
-try:  # prefer the RE2 path when the runtime supports it
-    import pyarrow.compute as _pc
-
-    _EXTRACT_IMPL = _extract_arrow if hasattr(_pc, "extract_regex") else _extract_pandas
-except Exception:  # pragma: no cover
-    _EXTRACT_IMPL = _extract_pandas
-
-
-# explicit DataType (not a DDL string) so the UDF can be defined without an
-# active SparkSession (the DDL parser needs one)
-@pandas_udf(StringType())
-def extract_payload_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Series[str] text -> Series[str|None] first JSON-object-looking line.
-
-    First match per row, exactly like the oracle's ``LINE_RE.search``
-    (functions/extract.py). NaN/None text => None.
-    """
-    impl = _EXTRACT_IMPL  # bound once per worker process
-    for s in batches:
-        yield impl(s)
 
 
 #: Output schema of the wide-grammar fallback parse (Go zero values for
@@ -130,7 +93,22 @@ def _fallback_columns(lines: pd.Series, need_fb) -> dict:
     return {c: pd.Series(v, dtype="object") for c, v in cols.items()}
 
 
-@pandas_udf(_EXTRACT_PARSE_SCHEMA)
+def _fast_mask(lines: pd.Series) -> pd.Series:
+    """True where the Catalyst fast path covers the line: RE2 full match of
+    the field pattern, and each primary key exactly once (a re-specified
+    primary key in the extras tail must take the last-wins fallback)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arr = pa.Array.from_pandas(lines, type=pa.string())
+    m = pc.match_substring_regex(arr, _FIELD_RE2)
+    uniq = pc.equal(
+        pc.count_substring_regex(arr, X.PRIMARY_KEY_PATTERN),
+        X.PRIMARY_KEY_COUNT,
+    )
+    return pc.fill_null(pc.and_(m, uniq), False).to_pandas()
+
+
 def extract_parse_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     """ONE Arrow stage for the whole Python side of the parse: payload
     extraction (vectorized RE2) + the wide-grammar json fallback for the
@@ -144,50 +122,22 @@ def extract_parse_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     ArrowEvalPython node (a separate fallback UDF would add a second
     full-column Arrow round trip to the hot path).
     """
-    import pyarrow as pa
-
-    impl = _EXTRACT_IMPL  # bound once per worker process
-    try:
-        import pyarrow.compute as pc
-
-        def fast_mask(lines: pd.Series) -> pd.Series:
-            arr = pa.Array.from_pandas(lines, type=pa.string())
-            m = pc.match_substring_regex(arr, _FIELD_RE2)
-            # dup-primary-key guard: a re-specified primary key in the
-            # extras tail must take the last-wins fallback (ADVICE fix)
-            uniq = pc.equal(
-                pc.count_substring_regex(arr, X.PRIMARY_KEY_PATTERN),
-                X.PRIMARY_KEY_COUNT,
-            )
-            return pc.fill_null(pc.and_(m, uniq), False).to_pandas()
-    except Exception:  # pragma: no cover - pyarrow.compute always present
-        # the CANONICAL compiled regex (re.ASCII): recompiling the pattern
-        # without the flag would let Unicode digits pass this gate while
-        # the downstream Java-regex gate rejects them — cross-engine break
-        _fre = X.FIELD_RE
-
-        def fast_mask(lines: pd.Series) -> pd.Series:
-            return lines.map(
-                lambda s: isinstance(s, str) and bool(_fre.match(s))
-                and X.unique_primary_keys(s)
-            )
-
     for s in batches:
-        lines = impl(s)
-        need_fb = lines.notna() & ~fast_mask(lines)
+        lines = _extract_arrow(s)
+        need_fb = lines.notna() & ~_fast_mask(lines)
         out = {"line": pd.Series(lines, dtype="object")}
         out.update(_fallback_columns(lines, need_fb))
         yield pd.DataFrame(out)
 
 
-def extract_payload_expr(text: Column) -> Column:
-    """JVM twin: regexp_extract with the same canonical pattern.
+def extract_parse(text: Column) -> Column:
+    """``extract_parse_udf`` applied to ``text``: a struct of the extracted
+    line and the fallback fields.
 
-    Java regex semantics match Python's for this pattern subset: '.' does not
-    cross newlines, and MULTILINE '^'/'$' anchor at '\\n' boundaries (the
-    corpus never contains '\\r', where the two engines would differ).
-    regexp_extract yields '' on no-match; a real payload always starts with
-    '{' so '' unambiguously means "no payload" -> NULL.
-    """
-    got = F.regexp_extract(text, "(?m)(" + X.LINE_PATTERN + ")", 1)
-    return F.nullif(got, F.lit(""))
+    The pandas UDF is built per call, not once at import: a UDF object
+    caches its Java function on first use, and that function reports task
+    accumulators to the SparkContext that was live then. A module-level UDF
+    used again after its session stopped and a new one started would send
+    every task's update to a dead accumulator server ("Failed to update
+    accumulator" errors on each task)."""
+    return pandas_udf(extract_parse_udf, _EXTRACT_PARSE_SCHEMA)(text)

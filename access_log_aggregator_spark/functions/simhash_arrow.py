@@ -101,7 +101,6 @@ def _powers(n: int) -> np.ndarray:
     return _POW_CACHE
 
 
-@F.pandas_udf(LongType())
 def _simhash_udf(texts: pd.Series) -> pd.Series:
     max_len = max((len(t) for t in texts if t is not None), default=1)
     powers = _powers(max(max_len, _MAX_FAST_TOKEN) + 1)
@@ -111,4 +110,6 @@ def _simhash_udf(texts: pd.Series) -> pd.Series:
 def simhash(text_col: str) -> Column:
     """64-bit simhash column, bit-identical to the canonical
     xsql.simhash_expr over xsql.tokens token hashes."""
-    return _simhash_udf(F.col(text_col))
+    # built per call, bound to the live SparkContext (see
+    # parse_udf.extract_parse)
+    return F.pandas_udf(_simhash_udf, LongType())(F.col(text_col))

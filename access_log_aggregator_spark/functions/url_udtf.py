@@ -46,9 +46,16 @@ def iter_url_params(url: str | None):
             yield (k, v)
 
 
-@udtf(returnType="param string, value string")
-class UrlParamsUDTF:
+class UrlParams:
     """yield one (param, value) row per query parameter of ``url``."""
 
     def eval(self, url: str):  # noqa: D102 - contract is the module docstring
         yield from iter_url_params(url)
+
+
+def url_params_udtf():
+    """``UrlParams`` as a Python UDTF, built per call: a UDTF object caches
+    its Java function, bound to the SparkContext live at first use, so a
+    module-level one would report to a stopped context's accumulator
+    server once a new session starts in the same process."""
+    return udtf(UrlParams, returnType="param string, value string")

@@ -15,17 +15,11 @@ extracted payload column:
 - WIDE-GRAMMAR FALLBACK (rows that miss the fast path): the full
   json.Unmarshal grammar — reordered keys, interstitial whitespace, escaped
   strings, duplicate keys (last wins), trailing-content rejection
-  (model_test.go:30), strict field typing. Two interchangeable
-  implementations:
-  * Arrow path (default): :func:`...functions.parse_udf.extract_parse_udf`
-    — extraction AND fallback in ONE ArrowEvalPython node, exact Go
-    semantics via the shared ``go_unmarshal_fields`` primitive. The
-    fast-path check is vectorized RE2, so per-row Python touches only the
-    rare remainder.
-  * JVM path: ``from_json`` to ``map<string,variant>`` (keeps duplicate
-    entries => exact Go last-wins via last-entry-per-key extraction) +
-    ``schema_of_variant`` field typing + an exact any-depth brace fold for
-    trailing-content rejection. No known divergences from Go's grammar.
+  (model_test.go:30), strict field typing — decoded by
+  :func:`...functions.parse_udf.extract_parse_udf`: extraction AND fallback
+  in ONE ArrowEvalPython node, exact Go semantics via the shared
+  ``go_unmarshal_fields`` primitive. The fast-path check is vectorized RE2,
+  so per-row Python touches only the rare remainder.
 - validation: the model.go:24 predicate, with present-but-zero handled
   exactly (``status_code == 0`` / ``duration == 0.0`` reject);
 - timestamp: RFC3339 with optional 1-9 digit fraction; nanoseconds truncate
@@ -43,49 +37,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import extract as X
-from ..functions.parse_udf import extract_parse_udf, extract_payload_expr
+from ..functions.parse_udf import extract_parse
 
 _TS_BASE_RE = r"^(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})"
 _TS_FRAC_RE = r"^[^.]*\.(\d{1,9})"
 _TS_OFF_RE = r"(Z|[+-]\d{2}:\d{2})$"
 _GO_ZERO = "0001-01-01T00:00:00+00:00"
-
-#: JSON string literal (for stripping strings before the brace-balance check)
-_JSON_STR_LIT = r'"(?:[^"\\]|\\.)*"'
-
-#: from_json options that disable Jackson laxities Go's json package lacks
-#: (single-quoted strings, NaN/Infinity literals; the other lax options —
-#: comments, unquoted field names/control chars, leading zeros — are already
-#: off by default).
-_STRICT_JSON_OPTS = {"allowSingleQuotes": "false", "allowNonNumericNumbers": "false"}
-
-
-def _single_object_spans_line(stripped: Column) -> Column:
-    """Exact trailing-content guard at ANY nesting depth: over the
-    string-stripped line, fold characters tracking brace depth; the line is
-    one complete JSON object iff depth first returns to 0 exactly at the
-    last character (Go json.Unmarshal rejects trailing content,
-    model_test.go:30 — and from_json/try_parse_json both ACCEPT it, so this
-    check is what enforces Go's rule on the JVM path). Extraction guarantees
-    the line starts with '{' and ends with '}' (LINE_PATTERN), so no
-    leading/trailing whitespace case arises. Runs only on the rare
-    fallback rows."""
-    def step(acc: Column, c: Column) -> Column:
-        nd = acc.depth + F.when(c == "{", 1).when(c == "}", -1).otherwise(0)
-        return F.struct(
-            nd.alias("depth"),
-            (acc.done | (nd == 0)).alias("done"),
-            (acc.trailing | acc.done).alias("trailing"),
-        )
-
-    init = F.struct(
-        F.lit(0).alias("depth"), F.lit(False).alias("done"),
-        F.lit(False).alias("trailing"),
-    )
-    return F.aggregate(
-        F.split(stripped, ""), init, step, lambda acc: acc.done & ~acc.trailing
-    )
-
 
 def _log_ts(time_str: Column) -> Column:
     """RFC3339 string -> TimestampType (UTC instant, micros, null if invalid).
@@ -135,124 +92,7 @@ def _log_ts(time_str: Column) -> Column:
     )
 
 
-def _jvm_fallback(df: DataFrame) -> DataFrame:
-    """Pure-Catalyst wide-grammar parse of ``_fbline`` into ``_fb`` (same
-    struct contract as go_fallback_udf). Field typing follows Go unmarshal:
-    time/host must be JSON strings, status_code a non-overflowing integer
-    (variant types huge ints as DECIMAL(19,0) -> rejected, exactly Go's
-    overflow error), duration any finite JSON number; null/missing leave
-    the Go zero value.
-
-    Duplicate keys decode like Go's streaming object loop: EVERY entry with
-    a primary key must type-check (``_allok_*`` forall over the map entries
-    — Go saves the decode error of ANY occurrence, even when a later
-    duplicate would succeed), a JSON ``null`` occurrence is a NO-OP (Go
-    leaves the field's previous value), and the surviving value is the last
-    non-null entry (``from_json`` keeps duplicate map entries in order).
-    Trailing content is rejected by an exact any-depth brace fold
-    (:func:`_single_object_spans_line`). Unpaired surrogate ESCAPES are
-    rewritten to the \\uFFFD escape on the raw line before parsing — Go's
-    decoder substitutes U+FFFD there, and the JVM string path would
-    otherwise degrade the lone surrogate to '?' (see the inline comment).
-    """
-    # Lone-surrogate escapes -> the � ESCAPE TEXT before Jackson sees
-    # the line: Go's decoder substitutes U+FFFD for an unpaired
-    # \uD800-\uDFFF, while the JVM path loses the surrogate to '?' during
-    # String->UTF8String conversion — unfixable after the fact, so the
-    # substitution happens on the raw ASCII escape sequences. The
-    # (?<!\\)((?:\\\\)*) prefix consumes an EVEN run of backslashes from a
-    # non-backslash boundary, so the literal text \\ud800 (escaped
-    # backslash + 'ud800') is never rewritten; a high escape directly
-    # followed by a low escape is a valid pair and is left alone, exactly
-    # like Go's unquote.
-    _HI = r"\\u[dD][89abAB][0-9a-fA-F]{2}"
-    _LO = r"\\u[dD][c-fC-F][0-9a-fA-F]{2}"
-    line2 = F.regexp_replace(
-        "_fbline", f"(?<!\\\\)((?:\\\\\\\\)*){_HI}(?!{_LO})", r"$1\\uFFFD")
-    line2 = F.regexp_replace(
-        line2, f"(?<!{_HI})(?<!\\\\)((?:\\\\\\\\)*){_LO}", r"$1\\uFFFD")
-    df = df.withColumn(
-        "_fbm", F.from_json(line2, "map<string,variant>", _STRICT_JSON_OPTS)
-    )
-
-    def entries(fld: str):
-        return F.filter(F.map_entries("_fbm"), lambda e: e.key == F.lit(fld))
-
-    def v_ts(v: Column) -> Column:
-        s = F.try_variant_get(v, "$", "string")
-        return s.rlike(X.TIME_PATTERN) & _log_ts(s).isNotNull()
-
-    _OK_PREDS = {
-        # Go time.Time.UnmarshalJSON ERRORS on a non-RFC3339 string (an
-        # unmarshal failure, not a validation failure) — mirror that so
-        # both fallback implementations produce the same json_ok/reason
-        "time": lambda v: (F.schema_of_variant(v) == "VOID")
-        | ((F.schema_of_variant(v) == "STRING") & v_ts(v)),
-        "host": lambda v: F.schema_of_variant(v).isin("VOID", "STRING"),
-        "status_code": lambda v: F.schema_of_variant(v).isin("VOID", "BIGINT"),
-        "duration": lambda v: (
-            F.schema_of_variant(v).isin("VOID", "BIGINT", "DOUBLE")
-            | F.schema_of_variant(v).like("DECIMAL%"))
-        & ((F.schema_of_variant(v) == "VOID")
-           | (F.abs(F.try_variant_get(v, "$", "double"))
-              != F.lit(float("inf")))),
-    }
-    def _entry_pred(pred):
-        # plain closure: a default-arg lambda would read to PySpark's
-        # lambda-signature introspection as a TWO-parameter function
-        return lambda e: pred(e.value)
-
-    for fld in ("time", "host", "status_code", "duration"):
-        df = df.withColumn(
-            f"_allok_{fld}",
-            F.forall(entries(fld), _entry_pred(_OK_PREDS[fld])),
-        ).withColumn(
-            # surviving value: last NON-NULL entry (Go null no-op)
-            f"_v_{fld}",
-            F.try_element_at(
-                F.filter(entries(fld),
-                         lambda e: F.schema_of_variant(e.value) != "VOID"),
-                F.lit(-1),
-            ).value,
-        )
-
-    def vtype(field: str) -> Column:
-        return F.expr(f"schema_of_variant(_v_{field})")
-
-    def vget(field: str, typ: str) -> Column:
-        return F.expr(f"try_variant_get(_v_{field}, '$', '{typ}')")
-
-    t_t, h_t, s_t, d_t = (vtype(f) for f in ("time", "host", "status_code", "duration"))
-    stripped = F.regexp_replace(F.col("_fbline"), _JSON_STR_LIT, '""')
-    balanced = _single_object_spans_line(stripped)
-    d_val = F.when(
-        d_t.isNull() | (d_t == "VOID"), F.lit(0.0)
-    ).otherwise(vget("duration", "double"))
-
-    json_ok = (
-        F.col("_fbline").isNotNull()
-        & F.col("_fbm").isNotNull()
-        & balanced
-        & F.col("_allok_time") & F.col("_allok_host")
-        & F.col("_allok_status_code") & F.col("_allok_duration")
-    )
-    fb = F.struct(
-        F.when(t_t == "STRING", vget("time", "string"))
-        .otherwise(F.lit(X.GO_ZERO_TIME)).alias("time_str"),
-        F.when(h_t == "STRING", vget("host", "string"))
-        .otherwise(F.lit("")).alias("host"),
-        F.when(s_t == "BIGINT", vget("status_code", "bigint"))
-        .otherwise(F.lit(0)).cast("long").alias("status_code"),
-        F.coalesce(d_val, F.lit(0.0)).alias("duration"),
-        json_ok.alias("json_ok"),
-    )
-    return df.withColumn("_fb", fb).drop(
-        "_fbm", "_v_time", "_v_host", "_v_status_code", "_v_duration",
-        "_allok_time", "_allok_host", "_allok_status_code", "_allok_duration",
-    )
-
-
-def parse_stage(pages: DataFrame, use_arrow_udf: bool = True) -> DataFrame:
+def parse_stage(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> parsed frame with validity flags.
 
     Output columns: url, warc_ts, lang, html_valid, extracted_text,
@@ -260,12 +100,9 @@ def parse_stage(pages: DataFrame, use_arrow_udf: bool = True) -> DataFrame:
     parse_reason (null when record_valid), source_partition (lineage).
     """
     df = pages.withColumn("html_valid", F.is_valid_utf8(F.col("html")))
-    if use_arrow_udf:
-        # ONE ArrowEvalPython node: extraction + rare-row json fallback
-        df = df.withColumn("_ex", extract_parse_udf(F.col("text")))
-        df = df.withColumn("extracted_text", F.col("_ex.line"))
-    else:
-        df = df.withColumn("extracted_text", extract_payload_expr(F.col("text")))
+    # ONE ArrowEvalPython node: extraction + rare-row json fallback
+    df = df.withColumn("_ex", extract_parse(F.col("text")))
+    df = df.withColumn("extracted_text", F.col("_ex.line"))
 
     et = F.col("extracted_text")
     # Gate on one anchored rlike, then pack all four capture groups in a
@@ -290,20 +127,12 @@ def parse_stage(pages: DataFrame, use_arrow_udf: bool = True) -> DataFrame:
     for i, name in enumerate(["_time_fast", "_host_fast", "_status_fast", "_dur_fast"]):
         df = df.withColumn(name, F.split(F.col("_packed"), "\x01").getItem(i))
 
-    # wide-grammar fallback fields (already computed inside the Arrow UDF
-    # for the default path; derived via variant parsing on the JVM path,
-    # with the input gated NULL for rows the fast path took)
-    if use_arrow_udf:
-        df = df.withColumn(
-            "_fb",
-            F.struct(*[F.col(f"_ex.{c}").alias(c) for c in
-                       ("time_str", "host", "status_code", "duration", "json_ok")]),
-        ).drop("_ex")
-    else:
-        df = df.withColumn(
-            "_fbline", F.when(~F.col("field_matched") & et.isNotNull(), et)
-        )
-        df = _jvm_fallback(df)
+    # wide-grammar fallback fields, computed inside the Arrow UDF
+    df = df.withColumn(
+        "_fb",
+        F.struct(*[F.col(f"_ex.{c}").alias(c) for c in
+                   ("time_str", "host", "status_code", "duration", "json_ok")]),
+    ).drop("_ex")
     fb_ok = F.coalesce(F.col("_fb.json_ok"), F.lit(False))
 
     # unified record fields (fast captures are escape-free: raw == Go value)
@@ -373,7 +202,7 @@ def parse_stage(pages: DataFrame, use_arrow_udf: bool = True) -> DataFrame:
     # per-partition lineage (north_rule: per-partition lineage + metrics)
     df = df.withColumn("source_partition", F.spark_partition_id())
     return df.drop(
-        "host_raw", "field_matched", "parse_ok", "_packed", "_fbline", "_fb",
+        "host_raw", "field_matched", "parse_ok", "_packed", "_fb",
         "_time_fast", "_host_fast", "_status_fast", "_dur_fast", "_log_ts_all",
     )
 

@@ -137,9 +137,9 @@ def _file_writer(staging: str, bloom_cols: list[str]):
     return write
 
 
-def build_routed(pages: DataFrame, lookup: DataFrame, use_arrow_udf: bool = True) -> DataFrame:
+def build_routed(pages: DataFrame, lookup: DataFrame) -> DataFrame:
     """The lazy logical plan for one batch (no action taken)."""
-    parsed = parse_stage(pages, use_arrow_udf=use_arrow_udf)
+    parsed = parse_stage(pages)
     enriched = enrich(parsed, lookup)
     routed = route(enriched)
     return routed.select(*ROUTED_COLUMNS)
@@ -158,12 +158,10 @@ class Pipeline:
     """Batch pipeline bound to a routed sink table + aggregate tables."""
 
     def __init__(self, spark: SparkSession, out_root: str | Path,
-                 lookup: DataFrame, use_arrow_udf: bool = True,
-                 write_partitions: Optional[int] = None):
+                 lookup: DataFrame, write_partitions: Optional[int] = None):
         self.spark = spark
         self.out_root = Path(out_root)
         self.lookup = lookup
-        self.use_arrow_udf = use_arrow_udf
         #: explicit pre-write repartition on url (north_rule: "handles
         #: warc_ts/url skew via explicit repartitioning"): url hashes spread
         #: uniformly regardless of host/warc_ts skew, so write tasks balance
@@ -177,7 +175,7 @@ class Pipeline:
         """Parse+enrich+route one batch of pages and commit it to the routed
         sink (idempotent on batch_id). Counts come from the write tasks'
         file records — no second scan of the input."""
-        routed = build_routed(pages, self.lookup, self.use_arrow_udf)
+        routed = build_routed(pages, self.lookup)
         snap, counts = self._append_partitioned(routed, marker=batch_id)
         counts = {c: counts.get(c, 0) for c in X.ALL_CLASSES}
         return BatchResult(

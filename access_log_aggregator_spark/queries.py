@@ -1442,10 +1442,10 @@ def _q_pipeline_url_params(spark, sf_dir):
     splitting over the same parquet (which doubles as the proof that THIS
     expansion never needed Python — the UDTF is the extension-surface
     demo)."""
-    from .functions.url_udtf import UrlParamsUDTF
+    from .functions.url_udtf import url_params_udtf
 
     root = ensure_pipeline_fixtures()
-    spark.udtf.register("url_params", UrlParamsUDTF)
+    spark.udtf.register("url_params", url_params_udtf())
     spark.read.parquet(str(root / "pages")).createOrReplaceTempView("_pages_udtf")
     return spark.sql("""
         select p.param,

@@ -14,7 +14,6 @@ All diagnostics go to stderr.
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -409,34 +408,6 @@ def main() -> int:
                 f"{job_cpu[-1] / (n_host * el):.0%} of cores "
                 f"[jvm {jvm_cpu[-1]:.0f} / py {py_cpu[-1]:.0f}], "
                 f"gc {gc_sec[-1]:.1f}s)")
-        # The same pipeline through the pure-JVM parse twin (regexp_extract
-        # fast path + from_json variant fallback — no python stage at all,
-        # so html/text never cross the Arrow boundary). Row-identical to
-        # the Arrow path (tests/test_parse_parity.py); measured ~1.6x
-        # faster here. The Arrow path stays the default/headline because
-        # the target spec prescribes a vectorized pandas/Arrow UDF; this
-        # number documents what the engine does when the built-in
-        # expression surface is allowed to carry the whole parse.
-        # Same plateau warm-up as the Arrow path (its codegen plan differs,
-        # so it has its own C2 backlog — asymmetric warm-up would make the
-        # published Arrow-vs-JVM ratio a methodology artifact); the scan/
-        # join/sink JIT is shared, so the plateau arrives in fewer runs.
-        jvm_warm = []
-        while len(jvm_warm) < 15:
-            c0 = _tree_jiffies()["total"]
-            _noop_run(build_routed(pages, lookup, use_arrow_udf=False))
-            jvm_warm.append(round((_tree_jiffies()["total"] - c0) / HZ, 1))
-            w = jvm_warm[-3:]
-            if len(jvm_warm) >= 3 and max(w) <= 1.10 * min(w):
-                break
-        jvm_best = math.inf
-        for _ in range(5):
-            t0 = time.time()
-            _noop_run(build_routed(pages, lookup, use_arrow_udf=False))
-            jvm_best = min(jvm_best, time.time() - t0)
-        log(f"pipeline_full_jvm: warm cpu {jvm_warm}; best {jvm_best:.3f}s "
-            f"= {PIPELINE_PAGES / jvm_best:,.1f} pages/s")
-
         order = sorted(range(len(trials)), key=lambda k: trials[k])
         trials_sorted = [trials[k] for k in order]
         pipe_sec = trials_sorted[0]
@@ -484,14 +455,6 @@ def main() -> int:
             "sf": sf,
             "pipeline_pages": PIPELINE_PAGES,
             "pipeline_pages_per_sec": pages_per_sec,
-            # same job through the pure-JVM parse twin (no python stage);
-            # row-identical, kept non-default per the spec's Arrow-UDF
-            # prescription — see BENCH/BASELINE.md. NOT part of "value" /
-            # "queries": it re-measures the same work as pipeline_full, and
-            # summing both would shift the headline total for a reader
-            # comparing rounds.
-            "pipeline_jvm_sec": round(jvm_best, 3),
-            "pipeline_jvm_pages_per_sec": round(PIPELINE_PAGES / jvm_best, 1),
             # round-over-round: compare per-query timings and
             # pipeline_pages_per_sec, NOT "value" — the pipeline corpus grew
             # 200k (r02) -> 4M pages so its wall-clock term is 20x more work

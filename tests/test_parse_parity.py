@@ -11,13 +11,14 @@ from access_log_aggregator_spark.operators.parse import parse_stage
 from access_log_aggregator_spark.operators.route import route
 
 
-def _routed(pages_df, lookup_sdf, use_arrow_udf):
-    return route(enrich(parse_stage(pages_df, use_arrow_udf), lookup_sdf))
+def _routed(pages_df, lookup_sdf):
+    return route(enrich(parse_stage(pages_df), lookup_sdf))
 
 
-@pytest.fixture(scope="module", params=[True, False], ids=["arrow_udf", "jvm_expr"])
-def spark_rows(request, pages_df, lookup_sdf):
-    df = _routed(pages_df, lookup_sdf, request.param)
+# one parse engine; the "arrow_udf" id keeps these tests' names stable
+@pytest.fixture(scope="module", params=["arrow_udf"])
+def spark_rows(pages_df, lookup_sdf):
+    df = _routed(pages_df, lookup_sdf)
     rows = df.select(
         "url", "extracted_text", "match_class", "reject_reason",
         "host", "status_code", "duration", "log_ts",
@@ -69,17 +70,9 @@ def test_row_conservation(spark_rows, corpus):
     assert len(spark_rows) == len(corpus.pages)
 
 
-def test_udf_and_expr_paths_agree(pages_df, lookup_sdf):
-    """The pandas-UDF extractor and the pure-JVM regexp extractor are twins."""
-    a = _routed(pages_df, lookup_sdf, True).select("url", "extracted_text", "match_class")
-    b = _routed(pages_df, lookup_sdf, False).select("url", "extracted_text", "match_class")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 # --------------------------------------------------------------------------
 # Wide-grammar equivalence: lines beyond the fast-path regex (reordered keys,
-# whitespace, escapes, type errors) classify identically to the Go oracle on
-# BOTH Spark parse variants.
+# whitespace, escapes, type errors) classify identically to the Go oracle.
 # --------------------------------------------------------------------------
 
 _T = '"time":"2025-09-28T17:12:09Z"'
@@ -87,7 +80,7 @@ _H = '"host":"grok.com"'
 _S = '"status_code":200'
 _D = '"duration":0.5'
 
-#: wide-grammar vectors both fallback implementations must classify like Go
+#: wide-grammar vectors the fallback must classify like Go
 WIDE_LINES = [
     "{%s,%s,%s,%s}" % (_H, _T, _D, _S),                    # reordered
     "{%s,%s,%s,%s}" % (_D, _S, _T, _H),                    # reordered 2
@@ -124,8 +117,7 @@ WIDE_LINES = [
     '{%s,%s,%s,"duration":9999999999999999999999}' % (_T, _H, _S),  # 22 digits: finite, VALID
     '{%s,"host":"a\x07b.com",%s,%s}' % (_T, _S, _D),       # raw control char: Go rejects
     '{%s,%s,"status_code":2٣,%s}' % (_T, _H, _D),     # unicode digit: invalid JSON
-    # duplicate keys: Go last-wins on BOTH fallback paths (map<string,variant>
-    # keeps dup entries on the JVM side; json.loads is last-wins on Arrow)
+    # duplicate keys: Go last-wins
     '{"host":"x.com",%s,%s,%s,%s}' % (_H, _T, _S, _D),     # dup key: last wins
     '{%s,%s,%s,%s,"x":{"a":{"b":{"c":1}}}}' % (_T, _H, _S, _D),  # depth-4 extra
     '{%s,%s,%s,%s,"x":{"a":{"b":{"c":{"d":{"e":1}}}}}}' % (_T, _H, _S, _D),  # depth-6
@@ -152,12 +144,13 @@ def _wide_pages(spark, lines):
     )
 
 
-@pytest.mark.parametrize("use_arrow", [True, False], ids=["arrow_udf", "jvm_expr"])
-def test_wide_grammar_matches_oracle(spark, lookup_sdf, use_arrow):
+# one parse engine; the "arrow_udf" id keeps this test's name stable
+@pytest.mark.parametrize("engine", ["arrow_udf"])
+def test_wide_grammar_matches_oracle(spark, lookup_sdf, engine):
     from access_log_aggregator_spark.oracle import classify_page
 
     lines = WIDE_LINES
-    df = _routed(_wide_pages(spark, lines), lookup_sdf, use_arrow)
+    df = _routed(_wide_pages(spark, lines), lookup_sdf)
     got = {r["url"]: r for r in df.select(
         "url", "match_class", "reject_reason", "host", "status_code", "duration"
     ).collect()}

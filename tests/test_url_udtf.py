@@ -9,8 +9,8 @@ import duckdb
 import pytest
 
 from access_log_aggregator_spark.functions.url_udtf import (
-    UrlParamsUDTF,
     iter_url_params,
+    url_params_udtf,
 )
 
 VECTORS = [
@@ -88,7 +88,7 @@ def test_duckdb_oracle_matches_generator():
 
 @pytest.mark.usefixtures("spark")
 def test_spark_udtf_matches_generator(spark):
-    spark.udtf.register("url_params_t", UrlParamsUDTF)
+    spark.udtf.register("url_params_t", url_params_udtf())
     df = spark.createDataFrame(
         [(u,) for u in VECTORS if u is not None], "url string"
     )
