@@ -460,7 +460,7 @@ def _maintain(spark, args, pages_table, pipe) -> None:
 def _ingest_log_files(spark, args):
     """Phase 3 of the reference's literal input mode: ``accessAgg -file
     a.log`` -> ``--log-file a.log``. Lines parse through the SAME
-    dual-engine parse/validate/route chain (extraction is the identity on
+    parse/validate/route chain as pages (extraction is the identity on
     a bare log line — byte-parity pinned on the reference corpus). With
     --out (or --data-dir) the batch commits to the routed sink under an
     idempotence marker derived from the files' (path, size, mtime)
@@ -520,7 +520,7 @@ def _ingest_log_files(spark, args):
 def _analyze_routed(rt, spark) -> None:
     """Heal the routed sink's statless files: files this release writes
     carry their stats and host blooms from the write tasks' own records
-    (``Pipeline._append_partitioned``), so this is one manifest read and
+    (``SnapshotTable.append_spark``), so this is one manifest read and
     no Spark job unless files committed statless by an earlier release
     remain; those get min/max/null bounds + host equality blooms from a
     DISTRIBUTED sweep, so downstream point lookups

@@ -11,28 +11,24 @@ The routed table is written once, hive-laid-out by ``match_class``, and
 the four sinks are partition-pruned views of it — the single-pass fan-out
 (SURVEY.md §2.5 K3): one pass over the TB-scale input, no persist()
 memory pressure, and each aggregate then scans only the small, narrow,
-column-pruned routed data. The write tasks themselves write the parquet
-files and return one record per file — path, class, rows and the file's
-stats with its host bloom — so the batch commit reads no footer and no
-second job sweeps the files for stats.
+column-pruned routed data. The write is ``SnapshotTable.append_spark``
+with ``partition_by="match_class"``: its tasks write the parquet files
+and return each file's stats with its host bloom, so the batch commit
+reads no footer and no second job sweeps the files for stats.
 
-Per-batch counts come from those records (the malformRecord-counter
-analog, internal/app/aggregate.go:15,38-41) and per-partition lineage
-from the ``source_partition`` column stamped at parse time.
+Per-batch counts come from the committed snapshot's per-file rows (the
+malformRecord-counter analog, internal/app/aggregate.go:15,38-41) and
+per-partition lineage from the ``source_partition`` column stamped at
+parse time.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Optional
 
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -48,8 +44,7 @@ from ..operators.aggregate import (
 from ..operators.enrich import enrich
 from ..operators.parse import parse_stage
 from ..operators.route import route
-from ..sources import filestats
-from ..sources.tableio import CommitConflict, SnapshotTable, write_parquet
+from ..sources.tableio import CommitConflict, SnapshotTable
 
 #: columns persisted to the routed sink (narrow — html/text already dropped)
 ROUTED_COLUMNS = [
@@ -57,14 +52,6 @@ ROUTED_COLUMNS = [
     "host", "status_code", "duration", "log_ts", "geo", "category",
     "reject_reason", "source_partition", "match_class",
 ]
-
-#: the columns of each routed parquet file: match_class lives only in the
-#: file's directory name (the hive layout a partitionBy write produces)
-_FILE_COLUMNS = [c for c in ROUTED_COLUMNS if c != "match_class"]
-
-#: one record per file a routed write task wrote (stats: the filestats
-#: record as JSON)
-_WRITTEN = "path string, match_class string, rows bigint, stats string"
 
 #: equality-bloom columns of the routed sink while its ``bloom_cols``
 #: property is unset: point lookups filter on host
@@ -88,9 +75,9 @@ def observe_routed_classes(routed: DataFrame, name: str):
     """Attach the per-class routing counters to ``routed`` as observe()
     metrics (rows_in + one count per match class) for the summary-only
     --log-file path, whose only job is the aggregate. The sink-committing
-    path (process_batch) counts from its write tasks' file records
-    instead; ``test_cli_maintenance`` pins that the two report the same
-    counts. Returns (df, observation)."""
+    path (process_batch) counts from the per-file rows of the snapshot
+    it committed instead; ``test_cli_maintenance`` pins that the two
+    report the same counts. Returns (df, observation)."""
     obs = Observation(name)
     counted = routed.observe(
         obs,
@@ -101,40 +88,6 @@ def observe_routed_classes(routed: DataFrame, name: str):
         ],
     )
     return counted, obs
-
-
-def _file_writer(staging: str, bloom_cols: list[str]):
-    """The routed write task: hold the task's share of the batch (narrow
-    routed rows; the bound is in SCALE.md) as ONE Arrow table, write one
-    parquet file per match class present to
-    ``<staging>/match_class=<c>/``, and yield one record per file with
-    its stats — taken from the footer just written — and its equality
-    blooms, built from the values in hand."""
-    def write(batches):
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return
-        table = pa.Table.from_batches(batches)
-        out = []
-        for c in pc.unique(table["match_class"]).to_pylist():
-            part = table.filter(pc.equal(table["match_class"], c)) \
-                .select(_FILE_COLUMNS)
-            d = os.path.join(staging, f"match_class={c}")
-            # mkdir, not makedirs: after a failed job the driver removes
-            # the staging root, and a straggling attempt must not
-            # recreate it
-            try:
-                os.mkdir(d)
-            except FileExistsError:
-                pass
-            path = os.path.join(d, f"part-{uuid.uuid4().hex}.parquet")
-            rec = filestats.stats_from_metadata(write_parquet(part, path))
-            filestats.add_blooms(rec, part, bloom_cols)
-            out.append((path, c, part.num_rows, json.dumps(rec)))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(col) for col in zip(*out)],
-            names=["path", "match_class", "rows", "stats"])
-    return write
 
 
 def build_routed(pages: DataFrame, lookup: DataFrame) -> DataFrame:
@@ -173,61 +126,34 @@ class Pipeline:
     # -- one batch ------------------------------------------------------------
     def process_batch(self, pages: DataFrame, batch_id: str) -> BatchResult:
         """Parse+enrich+route one batch of pages and commit it to the routed
-        sink (idempotent on batch_id). Counts come from the write tasks'
-        file records — no second scan of the input."""
-        routed = build_routed(pages, self.lookup)
-        snap, counts = self._append_partitioned(routed, marker=batch_id)
-        counts = {c: counts.get(c, 0) for c in X.ALL_CLASSES}
+        sink in ONE write job (:meth:`SnapshotTable.append_spark`,
+        hive-laid-out by match_class: the single-pass fan-out). Idempotent
+        on batch_id: a committed batch returns ``snapshot_id=None`` and
+        zero counts without running a job. Counts come from the committed
+        snapshot's per-file rows — no second scan of the input, no footer
+        read."""
+        t = self.routed_table
+        counts = dict.fromkeys(X.ALL_CLASSES, 0)
+        sid = None
+        if batch_id not in t.committed_markers():
+            routed = build_routed(pages, self.lookup)
+            if self.write_partitions:
+                routed = routed.repartition(self.write_partitions,
+                                            F.col("url"))
+            sid = t.append_spark(
+                routed, marker=batch_id, partition_by="match_class",
+                bloom_cols=(t.bloom_cols() if "bloom_cols" in t.properties()
+                            else list(DEFAULT_ROUTED_BLOOM_COLS)))
+            (snap,) = [s for s in t.snapshots() if s.id == sid]
+            for f, rec in (snap.stats or {}).items():
+                counts[Path(f).parent.name.split("=", 1)[1]] += rec["rows"]
         return BatchResult(
             batch_id=batch_id,
-            snapshot_id=snap,
+            snapshot_id=sid,
             sink_counts=counts,
             malformed=counts[X.CLASS_UNPARSED] + counts[X.CLASS_ERROR],
             rows_in=sum(counts.values()),
         )
-
-    def _append_partitioned(self, routed: DataFrame, marker: str
-                            ) -> tuple[Optional[int], dict[str, int]]:
-        """Write once, hive-laid-out by match_class (the single-pass
-        fan-out), and commit; returns (snapshot id, rows per class), or
-        (None, {}) when ``marker`` is already committed.
-
-        ONE Spark job: each write task writes its files and returns their
-        records (:func:`_file_writer`), so stats return with the write
-        tasks' records. The commit does ZERO driver-side parquet footer
-        reads — at 10^5 files/commit a footer sweep (one ~KB metadata read
-        per file) would be the last serial stage of an otherwise parallel
-        pipeline — and no follow-up job sweeps the files for stats. Only
-        the files of the attempts ``collect()`` returns are committed;
-        files of failed or speculative attempts stay in staging, which is
-        removed whatever happens. The renames that remain are
-        metadata-only ops that map onto a manifest rewrite (no move at
-        all) on a real object-store catalog — see SCALE.md."""
-        t = self.routed_table
-        if marker in t.committed_markers():
-            return None, {}  # idempotent re-run: batch already committed
-        bloom_cols = (t.bloom_cols() if "bloom_cols" in t.properties()
-                      else list(DEFAULT_ROUTED_BLOOM_COLS))
-        staging = t.root / f"_staging-{uuid.uuid4().hex}"
-        if self.write_partitions:
-            routed = routed.repartition(self.write_partitions, F.col("url"))
-        staging.mkdir(parents=True)
-        try:
-            written = routed.mapInArrow(
-                _file_writer(str(staging), bloom_cols), _WRITTEN).collect()
-            moved, stats, counts = [], {}, {}
-            for r in written:
-                d = t.root / "data" / f"match_class={r.match_class}"
-                d.mkdir(parents=True, exist_ok=True)
-                dest = d / f"part-{uuid.uuid4().hex}.parquet"
-                os.replace(r.path, dest)
-                moved.append(dest)
-                stats[str(dest)] = json.loads(r.stats)
-                counts[r.match_class] = counts.get(r.match_class, 0) + r.rows
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        sid = t._commit_files(moved, sum(counts.values()), marker, stats=stats)
-        return sid, counts
 
     # -- reads over the routed sink -------------------------------------------
     def routed(self) -> Optional[DataFrame]:

@@ -40,6 +40,8 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
+from . import filestats
+
 _MANIFEST = "manifest.json"
 
 #: Data files written by appends are named ``part-*``; compaction outputs
@@ -65,18 +67,74 @@ EXPIRED_MARKER_RETENTION = 10_000
 def write_parquet(table: pa.Table, dest) -> pq.FileMetaData:
     """Write ``table`` as ONE parquet file and return its footer (the
     ``metadata_collector`` copy: the caller's stats record costs no
-    read). Laid out like the Spark writer's files: no pandas or Arrow
-    schema metadata in the footer, and dictionary encoding only on the
-    columns that repeat values (``2 * distinct <= rows``, the Spark
-    writer's fallback rule) — a dictionary over unique urls or sums only
-    adds bytes. Shared by :meth:`SnapshotTable.overwrite_arrow` and the
-    routed sink's write tasks (``plans/pipeline.py``)."""
-    repeats = [c for c in table.column_names
-               if 2 * pc.count_distinct(table[c]).as_py() <= table.num_rows]
+    read). Laid out like the Spark writer's files: no Arrow schema in the
+    footer, and dictionary encoding only on the columns that repeat
+    values (``2 * distinct <= rows``, the Spark writer's fallback rule) —
+    a dictionary over unique urls or sums only adds bytes. Nested and
+    all-null columns stay out of the rule (no distinct-count kernel
+    exists for them); dictionary columns keep their dictionary. Every
+    data file a SnapshotTable writes goes through here, via
+    :func:`_write_file`."""
+    repeats = [f.name for f in table.schema
+               if pa.types.is_dictionary(f.type)
+               or not (pa.types.is_nested(f.type) or pa.types.is_null(f.type))
+               and 2 * pc.count_distinct(table[f.name]).as_py()
+               <= table.num_rows]
     mc: list = []
     pq.write_table(table, dest, metadata_collector=mc, store_schema=False,
                    use_dictionary=repeats)
     return mc[0]
+
+
+def _write_file(table: pa.Table, dest, bloom_cols: Sequence[str]) -> dict:
+    """Write ``table`` as one data file (:func:`write_parquet`) and return
+    its stats record, taken from the footer just written, with equality
+    blooms for ``bloom_cols`` built from the values in hand. The one
+    write step of every commit path that writes files (``append_pandas``,
+    ``append_spark``'s write tasks, ``compact``, ``overwrite_arrow``), so
+    each of them commits its files with their stats and no file has to
+    be read back."""
+    rec = filestats.stats_from_metadata(write_parquet(table, dest))
+    if bloom_cols:
+        filestats.add_blooms(rec, table, bloom_cols)
+    return rec
+
+
+#: one record per file an ``append_spark`` write task wrote: its staged
+#: path, its ``partition_by`` value and its stats record as JSON
+_WRITTEN = "path string, part string, stats string"
+
+
+def _task_writer(staging: str, partition_by: Optional[str],
+                 bloom_cols: Sequence[str]):
+    """The ``append_spark`` write task: hold the task's share of the frame
+    as ONE Arrow table (the per-task bound is in SCALE.md), write it to
+    ``staging`` as one file per ``partition_by`` value (one file when
+    None), the partition column kept out of the files, and yield one
+    :data:`_WRITTEN` record per file."""
+    def write(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        table = pa.Table.from_batches(batches)
+        parts = [(None, table)]
+        if partition_by is not None:
+            col = table[partition_by]
+            if col.null_count:
+                # pc.equal never selects a null: its rows would vanish
+                raise ValueError(f"null {partition_by!r} partition value")
+            parts = [(str(v), table.filter(pc.equal(col, v))
+                      .drop_columns([partition_by]))
+                     for v in pc.unique(col).to_pylist()]
+        out = []
+        for v, part in parts:
+            path = os.path.join(staging, f"part-{uuid.uuid4().hex}.parquet")
+            out.append((path, v, json.dumps(
+                _write_file(part, path, bloom_cols))))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, pa.string()) for c in zip(*out)],
+            names=["path", "part", "stats"])
+    return write
 
 
 class CommitConflict(RuntimeError):
@@ -253,9 +311,10 @@ class Snapshot:
     #: Per-file column statistics (Iceberg lower/upper-bounds analog),
     #: keyed by the file's manifest-relative path; see sources/filestats.py.
     #: None / missing entries mean "no stats recorded" — scan planning
-    #: fails OPEN on them. append_spark commits without stats (its
-    #: zero-footer-read invariant); :meth:`SnapshotTable.analyze` fills
-    #: them in afterwards with a distributed footer sweep.
+    #: fails OPEN on them. Every commit path of this release records
+    #: them at write time; files committed by earlier releases may lack
+    #: them, and :meth:`SnapshotTable.analyze` fills them in with a
+    #: distributed footer sweep.
     stats: Optional[dict] = None
     #: The manifest schema entry this snapshot was written under (Iceberg
     #: ties every snapshot to a schema id the same way). None on snapshots
@@ -531,9 +590,11 @@ class SnapshotTable:
         unlinked after the commit); ``properties`` merge into the table
         properties in the same manifest write. ``expected_current`` is
         the snapshot id the caller's rewrite read, 0 for an empty table."""
+        from pyspark.sql.types import StructField, StructType
+
         with self._manifest_lock():
             m = self._manifest()
-            # cleanup basis for the dedupe/conflict paths below: a file is
+            # cleanup basis for the dedupe/refusal paths below: a file is
             # safe to unlink ONLY if NO snapshot in the manifest references
             # it — not merely if it left the LIVE view. A losing compact
             # passes carried pre-existing files in ``files``; if the
@@ -543,96 +604,89 @@ class SnapshotTable:
             # a live-set basis would delete rows readers can still ask for.
             referenced = {str(self.root / f)
                           for s in m["snapshots"] for f in s["files"]}
-            dup_id = _marker_snapshot_id(m, marker) if marker is not None else None
-            if dup_id is not None:
-                # duplicate commit: drop the freshly staged files (never
-                # referenced), keep the table as-is
-                for f in files:
-                    if str(f) not in referenced:
-                        f.unlink(missing_ok=True)
-                return dup_id
-            cur = m["snapshots"][-1]["id"] if m["snapshots"] else None
-            if expected_current is not None:
+            keep = False  # set once the snapshot is built and will commit
+            try:
+                dup_id = (_marker_snapshot_id(m, marker)
+                          if marker is not None else None)
+                if dup_id is not None:
+                    # duplicate commit: keep the table as-is
+                    return dup_id
+                cur = m["snapshots"][-1]["id"] if m["snapshots"] else None
                 # optimistic commit (Iceberg CAS): a replace snapshot is
                 # only valid against the exact base it rewrote — an append
-                # that landed in between would be silently dropped from the
-                # live view if we committed anyway. Sound only because ids
-                # are MONOTONIC ACROSS TRUNCATE (``last_id`` below): a
+                # that landed in between would be silently dropped from
+                # the live view if we committed anyway. Sound only because
+                # ids are MONOTONIC ACROSS TRUNCATE (``last_id`` below): a
                 # truncate+rebuild between base capture and this check can
                 # never re-mint the captured id (ABA), so id equality
                 # really does mean "the exact state the rewrite read".
-                if (cur or 0) != expected_current:
-                    for f in files:
-                        if str(f) not in referenced:
-                            f.unlink(missing_ok=True)
+                if (expected_current is not None
+                        and (cur or 0) != expected_current):
                     raise CommitConflict(
                         f"table advanced (current={cur}, expected="
                         f"{expected_current}); retry the operation"
                     )
-            if unconvertible and "schemas" in m:
-                # in-lock twin of _precheck_schema's refusal: a racing
-                # first-append may have adopted a schema since the precheck
-                for f in files:
-                    if str(f) not in referenced:
-                        f.unlink(missing_ok=True)
-                raise SchemaMismatch(
-                    "frame contains arrow types outside the Spark type "
-                    "mapping — cannot validate against the tracked table "
-                    "schema; convert the column first")
-            doomed = _drop_history(m) if overwrite else []
-            schema_id = None
-            if schema is not None:
-                if "schemas" not in m:
-                    if not m["snapshots"]:
-                        # first-ever commit: adopt this schema as the table
-                        # schema (Iceberg records schema 0 at table create;
-                        # we don't know it until the first write). Adopt
-                        # all fields as NULLABLE: a read schema promising
-                        # non-null over a later file that holds nulls is
-                        # undefined behavior in Spark, and evolution makes
-                        # "later file with nulls" the normal case
-                        from pyspark.sql.types import StructField, StructType
-
-                        adopted = StructType([
-                            StructField(f.name, f.dataType, True,
-                                        f.metadata)
-                            for f in schema.fields])
-                        m["schemas"] = [{"id": 1,
-                                         "json": adopted.jsonValue()}]
-                        m["current_schema_id"] = 1
-                        schema_id = 1
-                    # else: legacy manifest predating schema tracking —
-                    # commit untracked, preserving its read behavior
-                else:
-                    current = _current_schema(m)
-                    try:
-                        _check_schema_compatible(schema, current)
-                    except SchemaMismatch:
-                        # same cleanup basis as the conflict path above:
-                        # staged files no snapshot references must not leak
-                        for f in files:
-                            if str(f) not in referenced:
-                                f.unlink(missing_ok=True)
-                        raise
-                    schema_id = m["current_schema_id"]
-            sid = max(cur or 0, int(m.get("last_id", 0))) + 1
-            m["last_id"] = sid
-            snap = {"id": sid,
-                    "files": [str(f.relative_to(self.root)) for f in files],
-                    "row_count": row_count, "marker": marker,
-                    "operation": operation}
-            if stats:
-                rel_stats = {
-                    str(f.relative_to(self.root)): stats[str(f)]
-                    for f in files if str(f) in stats
-                }
-                if rel_stats:
-                    snap["stats"] = rel_stats
-            if schema_id is not None:
-                snap["schema_id"] = schema_id
-            m["snapshots"].append(snap)
-            if properties:
-                m.setdefault("properties", {}).update(properties)
+                if unconvertible and "schemas" in m:
+                    # in-lock twin of _precheck_schema's refusal: a racing
+                    # first-append may have adopted a schema since the
+                    # precheck
+                    raise SchemaMismatch(
+                        "frame contains arrow types outside the Spark type "
+                        "mapping — cannot validate against the tracked "
+                        "table schema; convert the column first")
+                doomed = _drop_history(m) if overwrite else []
+                schema_id = None
+                if schema is not None:
+                    if "schemas" not in m:
+                        if not m["snapshots"]:
+                            # first-ever commit: adopt this schema as the
+                            # table schema (Iceberg records schema 0 at
+                            # table create; we don't know it until the
+                            # first write). Adopt all fields as NULLABLE:
+                            # a read schema promising non-null over a later
+                            # file that holds nulls is undefined behavior
+                            # in Spark, and evolution makes "later file
+                            # with nulls" the normal case
+                            adopted = StructType([
+                                StructField(f.name, f.dataType, True,
+                                            f.metadata)
+                                for f in schema.fields])
+                            m["schemas"] = [{"id": 1,
+                                             "json": adopted.jsonValue()}]
+                            m["current_schema_id"] = 1
+                            schema_id = 1
+                        # else: legacy manifest predating schema tracking —
+                        # commit untracked, preserving its read behavior
+                    else:
+                        _check_schema_compatible(schema, _current_schema(m))
+                        schema_id = m["current_schema_id"]
+                sid = max(cur or 0, int(m.get("last_id", 0))) + 1
+                m["last_id"] = sid
+                snap = {"id": sid,
+                        "files": [str(f.relative_to(self.root))
+                                  for f in files],
+                        "row_count": row_count, "marker": marker,
+                        "operation": operation}
+                if stats:
+                    rel_stats = {
+                        str(f.relative_to(self.root)): stats[str(f)]
+                        for f in files if str(f) in stats
+                    }
+                    if rel_stats:
+                        snap["stats"] = rel_stats
+                if schema_id is not None:
+                    snap["schema_id"] = schema_id
+                m["snapshots"].append(snap)
+                if properties:
+                    m.setdefault("properties", {}).update(properties)
+                keep = True
+            finally:
+                if not keep:
+                    # a dedupe or a refusal commits nothing: the staged
+                    # files no snapshot references must not leak
+                    for f in files:
+                        if str(f) not in referenced:
+                            f.unlink(missing_ok=True)
             self._write_manifest(m)
             for f in doomed:
                 (self.root / f).unlink(missing_ok=True)
@@ -684,7 +738,7 @@ class SnapshotTable:
         raises :class:`CommitConflict` otherwise — retry then.
 
         ``spark``: when given and any live file lacks manifest stats
-        (pre-analyze ``append_spark`` output), those files are auto-swept
+        (files committed by earlier releases), those files are auto-swept
         through the distributed :meth:`analyze` job first, so the
         planning pass does ZERO driver footer reads; without a session,
         each statless file pays one driver ``pq.read_metadata``.
@@ -723,13 +777,11 @@ class SnapshotTable:
                 "writes compact-*), but do not expire_snapshots until the "
                 "streams are done", stacklevel=2,
             )
-        from . import filestats
-
         base = self.current_snapshot_id()  # the state this rewrite is valid for
         live = self.data_files()
         known = self._file_stats()  # manifest stats: rows without footer IO
         if spark is not None and any(f not in known for f in live):
-            # statless files (pre-analyze append_spark output) would each
+            # statless files (files committed by earlier releases) would each
             # pay a DRIVER footer read in the planning pass below — at 10^5
             # files that serializes on the driver. With a session available,
             # enqueue them into the distributed analyze sweep instead (one
@@ -775,7 +827,7 @@ class SnapshotTable:
             for d, fs in sorted(groups.items()):
                 # per-file rows from the manifest stats when recorded —
                 # the planning pass then does zero footer reads; only
-                # statless files (pre-analyze append_spark output) pay one
+                # statless files (files committed by earlier releases) pay one
                 nrows = {
                     f: (known[f]["rows"] if f in known
                         else pq.read_metadata(f).num_rows)
@@ -826,16 +878,9 @@ class SnapshotTable:
                 for lo in range(0, max(merged.num_rows, 1), rows_per_file):
                     sl = merged.slice(lo, rows_per_file)
                     dest = d / f"compact-{uuid.uuid4().hex}.parquet"
-                    # metadata_collector hands back the footer we just
-                    # wrote: the output's stats record costs zero reads
-                    mc: list = []
-                    pq.write_table(sl, dest, metadata_collector=mc)
                     out.append(dest)
                     staged.append(dest)
-                    rec = filestats.stats_from_metadata(mc[0])
-                    if bcols:  # slice is in memory: blooms are free here
-                        filestats.add_blooms(rec, sl, bcols)
-                    stats[str(dest)] = rec
+                    stats[str(dest)] = _write_file(sl, dest, bcols)
             if not any_merge:
                 return None
             return self._commit_files(out, total, marker,
@@ -961,20 +1006,11 @@ class SnapshotTable:
 
     def append_pandas(self, pdf: pd.DataFrame, marker: Optional[str] = None,
                       schema: Optional[pa.Schema] = None) -> int:
-        from . import filestats
-
         table = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
         st = _spark_schema_of_arrow(table.schema)
         self._precheck_schema(st, unconvertible=st is None)
         dest = self.root / "data" / f"part-{uuid.uuid4().hex}.parquet"
-        # metadata_collector returns the footer being written: the stats
-        # record is derived with zero follow-up reads
-        mc: list = []
-        pq.write_table(table, dest, metadata_collector=mc)
-        rec = filestats.stats_from_metadata(mc[0])
-        bcols = self.bloom_cols()
-        if bcols:  # values are in hand: blooms cost no extra IO here
-            filestats.add_blooms(rec, table, bcols)
+        rec = _write_file(table, dest, self.bloom_cols())
         return self._commit_files(
             [dest], len(pdf), marker, stats={str(dest): rec},
             schema=st, unconvertible=st is None)
@@ -988,15 +1024,13 @@ class SnapshotTable:
         Guarded by the ``expected_current`` CAS (the snapshot id the
         rewrite was computed from, 0 for an empty table): a concurrent
         commit raises :class:`CommitConflict`. One file, written by
-        :func:`write_parquet`. Not for streamed tables: the old ``part-*``
+        :func:`_write_file`. Not for streamed tables: the old ``part-*``
         files are deleted."""
-        from . import filestats
-
         dest = self.root / "data" / f"part-{uuid.uuid4().hex}.parquet"
-        md = write_parquet(table, dest)
+        rec = _write_file(table, dest, self.bloom_cols())
         return self._commit_files(
             [dest], table.num_rows, None, expected_current=expected_current,
-            stats={str(dest): filestats.stats_from_metadata(md)},
+            stats={str(dest): rec},
             schema=_spark_schema_of_arrow(table.schema), overwrite=True,
             properties=properties)
 
@@ -1010,7 +1044,6 @@ class SnapshotTable:
         migrated files are prunable from day one. The files' UNION schema
         (by-name; conflicting types raise :class:`SchemaMismatch`) is
         validated against the table schema before anything is staged."""
-        from . import filestats
         from pyspark.sql.types import StructType
 
         srcs = [Path(s) for s in files]
@@ -1054,39 +1087,56 @@ class SnapshotTable:
         return self._commit_files(staged, n, marker, stats=stats,
                                   schema=union, unconvertible=not union_ok)
 
-    def append_spark(self, df: DataFrame, marker: Optional[str] = None) -> int:
-        """Write a DataFrame's partitions as one snapshot (staging dir + move).
+    def append_spark(self, df: DataFrame, marker: Optional[str] = None,
+                     partition_by: Optional[str] = None,
+                     bloom_cols: Optional[list[str]] = None) -> int:
+        """Write a DataFrame as one snapshot in ONE Spark job and return the
+        committed snapshot id.
 
-        The committed ``row_count`` comes from an :class:`~pyspark.sql.
-        Observation` attached to the write job — counted executor-side as
-        the rows stream to parquet, aggregated by Spark's collect-metrics
-        machinery — so the commit path does ZERO driver-side footer reads.
-        At 10^5 files/commit a driver footer sweep (one ~KB metadata read
-        per file, serial) would be the last sequential stage of an
-        otherwise parallel pipeline; the file *renames* that remain are
-        pure metadata ops and map onto a manifest-rewrite (no move at all)
-        on a real object-store catalog. ``add_files`` keeps the footer
-        path: it registers pre-existing files without running a job."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
+        Each write task writes its rows itself (:func:`_task_writer`) and
+        returns one record per file: its staged path and its stats record,
+        taken from the footer it just wrote, with equality blooms for
+        ``bloom_cols`` (default: the table's ``bloom_cols`` property). The
+        driver moves the files out of ``_staging-*`` and commits them with
+        their stats, so the commit does ZERO driver-side footer reads — at
+        10^5 files/commit a footer sweep (one ~KB metadata read per file,
+        serial) would be the last sequential stage of an otherwise
+        parallel pipeline — and no later job sweeps the files for stats.
+        The renames that remain are pure metadata ops and map onto a
+        manifest rewrite (no move at all) on a real object-store catalog.
+        Only the files of the attempts ``collect()`` returns are
+        committed; staging is removed whatever happens.
 
-        self._precheck_schema(df.schema)  # fail BEFORE running the write job
+        ``partition_by`` lays the files out hive-style, one file per task
+        and value under ``data/<column>=<value>/``, with the column kept
+        out of the files (the routed sink's layout); such a commit is
+        untracked, since the files' schema lacks the column. Otherwise
+        ``df.schema`` is validated before the job and tracked."""
+        schema = None if partition_by else df.schema
+        self._precheck_schema(schema)  # fail BEFORE running the write job
+        if bloom_cols is None:
+            bloom_cols = self.bloom_cols()
         staging = self.root / f"_staging-{uuid.uuid4().hex}"
+        staging.mkdir()
         try:
-            obs = Observation()
-            df.observe(obs, F.count(F.lit(1)).alias("rows")) \
-                .write.mode("overwrite").parquet(str(staging))
-            n = int(obs.get["rows"])
-            moved: list[Path] = []
-            for p in sorted(staging.glob("*.parquet")):
-                dest = self.root / "data" / f"part-{uuid.uuid4().hex}.parquet"
-                shutil.move(str(p), dest)
-                moved.append(dest)
+            written = df.mapInArrow(
+                _task_writer(str(staging), partition_by, bloom_cols),
+                _WRITTEN).collect()
+            files, stats = [], {}
+            for r in written:
+                d = self.root / "data"
+                if partition_by:
+                    d = d / f"{partition_by}={r.part}"
+                    d.mkdir(exist_ok=True)
+                dest = d / Path(r.path).name
+                os.replace(r.path, dest)
+                files.append(dest)
+                stats[str(dest)] = json.loads(r.stats)
         finally:
-            # a failed job leaves its attempts' partial files under
-            # _temporary/: nothing else would ever reclaim them
             shutil.rmtree(staging, ignore_errors=True)
-        return self._commit_files(moved, n, marker, schema=df.schema)
+        return self._commit_files(
+            files, sum(rec["rows"] for rec in stats.values()), marker,
+            stats=stats, schema=schema)
 
     def truncate(self) -> None:
         """Drop all snapshots and DELETE their data files (full-recompute
@@ -1139,8 +1189,9 @@ class SnapshotTable:
                 parallelism: Optional[int] = None,
                 bloom_cols: Optional[list[str]] = None) -> int:
         """Fill in column statistics for files committed without them —
-        chiefly :meth:`append_spark` output, whose commit path does zero
-        footer reads by design. The footer sweep runs as a Spark job
+        files committed by earlier releases, whose ``append_spark`` wrote
+        no stats; every commit path of this release records them at write
+        time. The footer sweep runs as a Spark job
         (:func:`~.filestats.collect_stats_distributed`), one task per
         slice of files, so at 10^5 files it parallelizes across the
         cluster instead of serializing on the driver; the driver collects
@@ -1156,8 +1207,6 @@ class SnapshotTable:
         The Iceberg analog is the write-path stats collection plus
         ``rewrite_manifests`` — run it after bulk ingests so scan
         planning (:meth:`read` ``where=``) can prune."""
-        from . import filestats
-
         m = self._manifest()
         bcols = self.bloom_cols() if bloom_cols is None else bloom_cols
         missing: set[str] = set()
@@ -1332,8 +1381,6 @@ class SnapshotTable:
             snaps = [Snapshot(**s) for s in _live_set(raw)[1]]
         table_cols = None
         if where:
-            from . import filestats
-
             filestats.validate_predicates(where)
             st = self._table_schema_from(m, end)
             if st is not None:
@@ -1388,8 +1435,6 @@ class SnapshotTable:
         reader = spark.read.schema(st) if st is not None else spark.read
         df = reader.parquet(*files)
         if where:
-            from . import filestats
-
             df = df.filter(filestats.spark_filter(where))
         return df
 

@@ -62,3 +62,27 @@ def pages_df(spark, corpus):
 @pytest.fixture(scope="session")
 def lookup_sdf(spark, corpus):
     return spark.createDataFrame(corpus.lookup)
+
+
+@pytest.fixture
+def commit_statless(tmp_path):
+    """``commit(table, df, marker)``: commit a Spark frame as parquet files
+    WITHOUT stats, the way ``append_spark`` committed before its write
+    tasks recorded them (Spark's writer, then a statless commit under
+    ``df.schema``). Tables written by earlier releases hold such files;
+    ``analyze`` and ``compact(spark=)`` exist to heal them."""
+    import shutil
+    import uuid
+
+    def commit(table, df, marker):
+        staging = tmp_path / f"statless-{uuid.uuid4().hex}"
+        df.write.parquet(str(staging))
+        files = []
+        for p in sorted(staging.glob("*.parquet")):
+            dest = table.root / "data" / f"part-{uuid.uuid4().hex}.parquet"
+            shutil.move(p, dest)
+            files.append(dest)
+        return table._commit_files(files, df.count(), marker,
+                                   schema=df.schema)
+
+    return commit

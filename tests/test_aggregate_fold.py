@@ -252,8 +252,8 @@ def test_fold_equals_recompute(spark, lookup_sdf, routed_rows,
         nonlocal pos
         rows = pdf.iloc[pos:pos + n]
         pos = (pos + n) % len(pdf)
-        p._append_partitioned(spark.createDataFrame(rows, schema),
-                              marker=f"b{next(batch)}")
+        rt.append_spark(spark.createDataFrame(rows, schema),
+                        marker=f"b{next(batch)}", partition_by="match_class")
 
     for op, *arg in ops:
         if op == "append":

@@ -123,14 +123,16 @@ def test_compact_rebuilds_blooms_for_rewritten_files(spark, tmp_path):
     assert after == before
 
 
-def test_analyze_backfills_blooms_for_spark_written_files(spark, tmp_path):
+def test_analyze_backfills_blooms_for_spark_written_files(
+        spark, tmp_path, commit_statless):
     t = SnapshotTable.create(tmp_path / "sp")
     t.set_properties(bloom_cols="host")
     df = spark.createDataFrame(
         [(f"{c}.example.net", i) for i, c in enumerate("abc")],
         "host string, n int")
-    t.append_spark(df, marker="s1")
-    # spark-written commit records no stats; the sweep adds bounds+blooms
+    commit_statless(t, df, "s1")
+    # a statless commit (earlier releases' append_spark); the sweep adds
+    # bounds+blooms
     assert t.analyze(spark) > 0
     assert len(t.data_files(where=[("host", "=", "a.example.net")])) >= 1
     assert t.read(spark, where=[("host", "=", "zz.example")]) is None

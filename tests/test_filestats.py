@@ -1,8 +1,8 @@
 """Manifest column statistics + scan-planning file pruning (zone maps).
 
 Pins the Iceberg-bounds analog (sources/filestats.py, SnapshotTable.read
-``where=``): stats are recorded on every write path that may touch
-footers, ``append_spark`` stays zero-footer-read and is back-filled by a
+``where=``): every commit path records its files' stats at write time,
+statless files committed by earlier releases are back-filled by a
 DISTRIBUTED ``analyze`` sweep, pruning is provably sound (a pruned read
 always equals full-scan + filter) while actually skipping files, and
 everything fails open when stats are missing.
@@ -13,6 +13,8 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from access_log_aggregator_spark.sources import filestats
@@ -104,13 +106,14 @@ def test_naive_datetimes_are_utc(spark, tmp_path):
     assert got.count() == 50
 
 
-def test_statless_files_fail_open(spark, tmp_path, pages_df):
-    """append_spark commits without stats (zero-footer invariant) — its
-    files are never pruned, and a mixed table prunes only what it can."""
+def test_statless_files_fail_open(spark, tmp_path, pages_df,
+                                  commit_statless):
+    """Files committed without stats (by earlier releases) are never
+    pruned, and a mixed table prunes only what it can."""
     t = _ranged_table(tmp_path, n_snaps=2)
     sdf = spark.createDataFrame(pd.DataFrame({
         "url": ["http://z/1"], "warc_ts": [_ts(100)], "n": [10_000]}))
-    t.append_spark(sdf, marker="spark")
+    commit_statless(t, sdf, "spark")
     spark_snap = t.snapshots()[-1]
     assert spark_snap.stats is None
     # a predicate excluding every pandas file still keeps the statless one
@@ -121,7 +124,7 @@ def test_statless_files_fail_open(spark, tmp_path, pages_df):
 
 
 def test_analyze_backfills_distributed_and_enables_pruning(
-        spark, tmp_path, monkeypatch):
+        spark, tmp_path, monkeypatch, commit_statless):
     """analyze() fills missing stats via a Spark job: with the DRIVER's
     pq.read_metadata poisoned, the footer reads must happen in executor
     workers — and afterwards the spark-written files prune."""
@@ -129,7 +132,7 @@ def test_analyze_backfills_distributed_and_enables_pruning(
     for i in range(3):
         pdf = pd.DataFrame({"url": [f"u{i}"], "warc_ts": [_ts(i)],
                             "n": [i * 100]})
-        t.append_spark(spark.createDataFrame(pdf), marker=f"s{i}")
+        commit_statless(t, spark.createDataFrame(pdf), f"s{i}")
     assert all(s.stats is None for s in t.snapshots())
 
     def boom(*a, **kw):  # driver-side footer read = test failure
@@ -410,11 +413,11 @@ def test_add_files_records_stats(tmp_path):
 
 
 def test_statless_compaction_zero_driver_footer_reads(
-        spark, tmp_path, monkeypatch):
+        spark, tmp_path, monkeypatch, commit_statless):
     """compact(spark=...) on a table whose live files have NO manifest
-    stats (pre-analyze append_spark output) auto-enqueues them through the
-    distributed analyze sweep instead of paying a driver pq.read_metadata
-    per file in the planning pass (r4 verdict #5): with the driver's
+    stats (files committed by earlier releases) auto-enqueues them
+    through the distributed analyze sweep instead of paying a driver
+    pq.read_metadata per file in the planning pass: with the driver's
     read_metadata poisoned, the whole rewrite stays green, and the
     rewritten table prunes."""
     t = SnapshotTable.create(tmp_path / "t")
@@ -423,7 +426,7 @@ def test_statless_compaction_zero_driver_footer_reads(
                             "warc_ts": pd.Series(
                                 [_ts(i)] * 5, dtype="datetime64[us, UTC]"),
                             "n": list(range(i * 5, i * 5 + 5))})
-        t.append_spark(spark.createDataFrame(pdf), marker=f"s{i}")
+        commit_statless(t, spark.createDataFrame(pdf), f"s{i}")
     assert all(s.stats is None for s in t.snapshots())
     before = {tuple(r) for r in t.read(spark).collect()}
 
@@ -443,14 +446,93 @@ def test_statless_compaction_zero_driver_footer_reads(
     assert len(t.data_files(where=[("n", ">=", 100)])) == 0  # prunable
 
 
-def test_statless_compaction_without_spark_still_works(spark, tmp_path):
+def test_statless_compaction_without_spark_still_works(spark, tmp_path,
+                                                      commit_statless):
     """No session handle -> the documented fallback: one driver footer
     read per statless file, same result."""
     t = SnapshotTable.create(tmp_path / "t")
     for i in range(2):
         pdf = pd.DataFrame({"url": [f"u{i}"], "n": [i]})
-        t.append_spark(spark.createDataFrame(pdf), marker=f"s{i}")
+        commit_statless(t, spark.createDataFrame(pdf), f"s{i}")
+    assert all(s.stats is None for s in t.snapshots())
     before = {tuple(r) for r in t.read(spark).collect()}
     sid = t.compact(rows_per_file=1_000)
     assert sid is not None
     assert {tuple(r) for r in t.read(spark).collect()} == before
+
+
+def _host_frame(i: int, rows: int = 12) -> pd.DataFrame:
+    return pd.DataFrame({
+        "host": [f"h{(i * rows + j) % 5}.example.net" for j in range(rows)],
+        "grp": [f"g{j % 2}" for j in range(rows)],
+        "warc_ts": pd.Series([_ts(i) + dt.timedelta(minutes=j)
+                              for j in range(rows)],
+                             dtype="datetime64[us, UTC]"),
+        "n": list(range(i * rows, (i + 1) * rows)),
+    })
+
+
+def _host_table(i: int) -> pa.Table:
+    return pa.Table.from_pandas(_host_frame(i), preserve_index=False)
+
+
+def _commit_append_pandas(t, spark, tmp_path):
+    for i in range(2):
+        t.append_pandas(_host_frame(i), marker=f"p{i}")
+
+
+def _commit_append_spark(t, spark, tmp_path):
+    t.append_spark(spark.createDataFrame(_host_frame(0)).repartition(3),
+                   marker="s")
+
+
+def _commit_append_spark_partitioned(t, spark, tmp_path):
+    t.append_spark(spark.createDataFrame(_host_frame(0)).repartition(3),
+                   marker="s", partition_by="grp")
+
+
+def _commit_overwrite_arrow(t, spark, tmp_path):
+    t.overwrite_arrow(_host_table(0), expected_current=0)
+
+
+def _commit_add_files(t, spark, tmp_path):
+    srcs = [tmp_path / f"src{i}.parquet" for i in range(2)]
+    for i, src in enumerate(srcs):
+        pq.write_table(_host_table(i), src)
+    t.add_files(srcs, marker="a")
+
+
+def _commit_compact(t, spark, tmp_path):
+    for i in range(3):
+        t.append_pandas(_host_frame(i), marker=f"p{i}")
+    t.append_pandas(_host_frame(3, rows=40), marker="full")  # carried
+    assert t.compact(rows_per_file=30, sort_by=["n"]) is not None
+
+
+@pytest.mark.parametrize("commit,bloom_cols", [
+    (_commit_append_pandas, "host"),
+    (_commit_append_spark, None),
+    (_commit_append_spark_partitioned, "host,grp"),
+    (_commit_overwrite_arrow, "host"),
+    (_commit_add_files, "host"),
+    (_commit_compact, "host"),
+], ids=["append_pandas", "append_spark", "append_spark_partitioned",
+        "overwrite_arrow", "add_files", "compact"])
+def test_every_commit_path_records_stats_at_write(spark, tmp_path, commit,
+                                                  bloom_cols):
+    """No commit path commits a statless file: every committed record
+    equals the footer stats of the file on disk plus the blooms
+    re-derived from it for the table's ``bloom_cols`` property."""
+    t = SnapshotTable.create(tmp_path / "t")
+    if bloom_cols:
+        t.set_properties(bloom_cols=bloom_cols)
+    commit(t, spark, tmp_path)
+    committed = t._file_stats()
+    live = t.data_files()
+    assert live and set(live) <= set(committed)
+    for f in live:
+        want = filestats.stats_from_footer(f)
+        if bloom_cols:
+            want = filestats.add_blooms_from_file(want, f, t.bloom_cols())
+        assert committed[f] == want, f
+    assert t.analyze(spark) == 0

@@ -181,10 +181,11 @@ def test_routed_commit_reads_zero_parquet_footers(
     spark, corpus, lookup_sdf, tmp_path_factory, monkeypatch
 ):
     """The routed-sink commit (the HOT path — every batch) takes its row
-    count from the write job's own Observation, never from driver-side
-    parquet footer reads: poisoning pyarrow.parquet.read_metadata proves
-    process_batch commits without touching it (tableio's append_spark has
-    the same guarantee, pinned in test_tableio.py)."""
+    count and stats from the write tasks' own records, never from
+    driver-side parquet footer reads: poisoning
+    pyarrow.parquet.read_metadata proves process_batch commits without
+    touching it (its write is tableio's append_spark, pinned the same
+    way in test_tableio.py)."""
     import pyarrow.parquet as pq
 
     def boom(*a, **k):

@@ -1,4 +1,5 @@
-"""The routed sink's task-side write (Pipeline._append_partitioned): each
+"""The routed sink's task-side write (SnapshotTable.append_spark with
+partition_by="match_class", as Pipeline.process_batch calls it): each
 write task writes its files and returns their stats and host blooms, so a
 batch is one Spark job, the commit reads no footer, and analyze has
 nothing left to sweep. Failed writes leave no staging behind."""

@@ -614,12 +614,12 @@ def test_crash_mid_manifest_write_preserves_old_manifest(tmp_path, monkeypatch):
 
 
 def test_append_spark_commit_reads_zero_parquet_footers(tmp_path, spark, monkeypatch):
-    """append_spark's committed row_count comes from the write job's own
-    Observation (executor-side collect-metrics), NOT from driver-side
-    footer reads — at 10^5 files/commit a serial footer sweep would be
-    the last sequential stage of the pipeline. Poisoning pq.read_metadata
-    proves the commit path never touches it (add_files keeps the footer
-    path: it registers files without running a job)."""
+    """append_spark's committed row_count and stats come from its write
+    tasks' own records (each task reads the footer it just wrote), NOT
+    from driver-side footer reads — at 10^5 files/commit a serial footer
+    sweep would be the last sequential stage of the pipeline. Poisoning
+    pq.read_metadata proves the commit path never touches it (add_files
+    keeps the footer path: it registers files without running a job)."""
     from access_log_aggregator_spark.sources import tableio as tio
 
     def boom(*a, **k):
@@ -635,10 +635,69 @@ def test_append_spark_commit_reads_zero_parquet_footers(tmp_path, spark, monkeyp
     assert sid == 1 and sid_empty == 2
     assert t.row_count() == 1000
     assert t.read(spark).count() == 1000
-    # marker replay still dedupes on the Observation path
+    # marker replay still dedupes
     assert t.append_spark(df, marker="spark-1") == 1
     assert t.row_count() == 1000
 
+
+
+def test_write_takes_nested_null_and_dictionary_columns(tmp_path):
+    """The dictionary rule of write_parquet counts distinct values, which
+    pyarrow cannot do for list, struct, map, null or dictionary columns:
+    those stay out of the rule instead of failing the write."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable.create(tmp_path / "nested")
+    table = pa.table({
+        "id": [1, 2], "v": [[1.0], [2.0, None]],
+        "s": [{"a": 1, "b": "x"}, {"a": 2, "b": None}],
+        "m": pa.array([[("k", 1)], []], pa.map_(pa.string(), pa.int64())),
+    })
+    assert t.overwrite_arrow(table, expected_current=0) == 1
+    (f,) = t.data_files()
+    assert pq.read_table(f).to_pylist() == table.to_pylist()
+
+    t = SnapshotTable.create(tmp_path / "flat")
+    pdf = pd.DataFrame({"c": pd.Categorical(["a", "b", "a"]),
+                        "z": [None, None, None]})
+    t.append_pandas(pdf)
+    (f,) = t.data_files()
+    back = pq.read_table(f).to_pandas()
+    assert back["c"].tolist() == ["a", "b", "a"]
+    assert back["z"].isna().all()
+
+
+def test_append_spark_round_trips_every_spark_type(tmp_path, spark):
+    """append_spark's task writer keeps every Spark type: the files read
+    back with the frame's schema (footer-inferred, not just the tracked
+    one) and its rows, and the tracked schema is ``df.schema``."""
+    import datetime as dt
+    from decimal import Decimal
+
+    schema = (
+        "k int, b byte, s short, i int, l bigint, f float, d double, "
+        "dec decimal(38,18), str string, bin binary, bool boolean, "
+        "dt date, ts timestamp, ntz timestamp_ntz, arr array<int>, "
+        "m map<string,bigint>, st struct<x:int,y:string>")
+    full = (1, -3, 300, 70_000, 2**40, 1.5, -2.25,
+            Decimal("12345678901234567890.123456789012345678"), "héllo",
+            b"\x00\xff", True, dt.date(2026, 3, 1),
+            dt.datetime(2026, 3, 1, 12, 30, 15, 123456,
+                        tzinfo=dt.timezone.utc),
+            dt.datetime(2026, 3, 1, 12, 30, 15, 654321), [1, None, 3],
+            {"a": 1, "b": None}, (7, "y"))
+    empty = (2, *[None] * 16)
+    df = spark.createDataFrame([full, empty, (3, *full[1:])], schema) \
+        .repartition(2)
+    t = SnapshotTable.create(tmp_path / "types")
+    assert t.append_spark(df, marker="types") == 1
+    assert t.table_schema() == df.schema
+    inferred = spark.read.parquet(*t.data_files())
+    assert inferred.schema == df.schema
+    for got in (inferred, t.read(spark)):
+        assert got.orderBy("k").collect() == df.orderBy("k").collect()
+    assert t.row_count() == 3
 
 _STRESS_WRITER = """
 import sys, time
